@@ -16,21 +16,14 @@ import org.apache.spark.sql.SparkSession
   *   post-shuffle partitions to data, below).
   * - AQE on: runtime re-planning (skew joins, partition coalescing)
   *   is part of the 100 TB story.
-  * - `coalescePartitions.minPartitionSize` raised from Spark's 1m
-  *   default (env `SPARK_GRAFT_MIN_PARTITION_BYTES`): AQE's coalesced
-  *   partition target is max(min(shuffleBytes/parallelism, advisory),
-  *   minPartitionSize), so the 1m floor schedules one reduce task per
-  *   MB of shuffle — at small inputs that is pure per-task latency
-  *   (measured: the full sf0.1 sweep ran FASTER on local[8] than
-  *   local[32] because every stage launched 32 sub-MB tasks). 16m
-  *   makes the post-shuffle partition count a function of DATA SIZE
-  *   (ceil(bytes/16m), capped by parallelism): a shuffle under 16 MB
-  *   is one task at any core count, while any shuffle big enough to
-  *   use the machine still fans out to shuffleBytes/16m ≤ cores tasks.
-  *   Scale story unchanged: at cluster inputs shuffleBytes/parallelism
-  *   far exceeds both floors, so this only trims the degenerate
-  *   small-shuffle tail (guide: partitions should be ~100 MB-1 GB,
-  *   never single-digit MB).
+  * - `coalescePartitions.minPartitionSize` stays at Spark's 1m
+  *   default but is parameterised (`SPARK_GRAFT_MIN_PARTITION_BYTES`).
+  *   AQE's coalesced partition target is max(min(shuffleBytes /
+  *   parallelism, advisory), minPartitionSize). A 16m floor was
+  *   measured slower (OPTIMIZATION_r20.md, item 1): fewer, bigger
+  *   coalesced partitions of the cached stages serialize their
+  *   consumers, and at small inputs reduce-side parallelism is worth
+  *   more than per-task launch latency.
   * - `advisoryPartitionSizeInBytes` stays at Spark's 64m default but
   *   is parameterised (`SPARK_GRAFT_ADVISORY_BYTES`) — the knob a
   *   cluster deployment raises to 256m for multi-TB shuffles.

@@ -3,7 +3,6 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Reusable data-quality primitives (SURVEY.md §2.2/§2.8).
   *
@@ -19,19 +18,14 @@ object Cleaning {
     */
   def isMissing(c: Column): Column = c.isNull || c === ""
 
-  /** Attach a stable physical-row index. Needed only by the two
+  /** Attach a physical-row index. Needed only by the two
     * order-sensitive operators (keep-first dedup, sequential ID
-    * backfill) — `zipWithIndex` assigns contiguous indexes per
-    * partition in partition order, which for a file-based scan is the
-    * file order at any scale.
+    * backfill), which need order, not contiguity: the ids are
+    * partition-major (partition index in the upper bits), and a
+    * single-file scan's partitions are its splits in file order.
     */
-  def withRowIdx(df: DataFrame, col: String = "_row_idx"): DataFrame = {
-    val schema = StructType(df.schema.fields :+ StructField(col, LongType, nullable = false))
-    val rdd = df.rdd.zipWithIndex().map { case (row, idx) =>
-      org.apache.spark.sql.Row.fromSeq(row.toSeq :+ idx)
-    }
-    df.sparkSession.createDataFrame(rdd, schema)
-  }
+  def withRowIdx(df: DataFrame): DataFrame =
+    df.withColumn("_row_idx", monotonically_increasing_id())
 
   /** Key-based dedup keeping the first physical row (SURVEY.md §2.8
     * D1; reference: extract-transform-data/et_produtos.py:66-85).
@@ -40,13 +34,12 @@ object Cleaning {
     */
   def dedupKeepFirst(df: DataFrame, keys: Seq[String],
                      keepIdx: Boolean = false): DataFrame = {
-    val idx = "_row_idx"
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(col(idx))
-    val deduped = withRowIdx(df, idx)
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(col("_row_idx"))
+    val deduped = withRowIdx(df)
       .withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
       .drop("_rn")
-    if (keepIdx) deduped else deduped.drop(idx)
+    if (keepIdx) deduped else deduped.drop("_row_idx")
   }
 
   /** Exact interpolated per-group median of `value` over its non-null

@@ -3,9 +3,10 @@ package graft.etl
 /** Presentation-neutral model of the S9 sales report: the reference's
   * section/table/chart inventory (save-data/save_data_pdf_report.py:
   * 480-745 — title, five sections in order, three charts), built ONCE
-  * from the five report aggregates and rendered by both the HTML/SVG
-  * writer (SalesReportHtml) and the dependency-free PDF writer
-  * (SalesReportPdf), so the two artifacts cannot drift.
+  * from the five report aggregates and rendered by the HTML/SVG
+  * writer (SalesReportHtml), the dependency-free PDF writer
+  * (SalesReportPdf) and RunSalesPipeline's console summary, so the
+  * three cannot drift.
   *
   * Each aggregate is collected exactly once; table cells are
   * pre-formatted here (locale-pinned) while chart values stay numeric
@@ -53,6 +54,12 @@ object ReportModel {
     if (rows.length > ReportMaxRows) (rows.take(ReportMaxRows), true) else (rows, false)
   }
 
+  /** The row count a summary states. A truncated collect never sees
+    * the true total, so it says only that the cap was exceeded.
+    */
+  private def total(rows: Array[org.apache.spark.sql.Row], truncated: Boolean): String =
+    if (truncated) s"mais de $ReportMaxRows" else rows.length.toString
+
   private def truncNote(truncated: Boolean): String =
     if (truncated) s" Exibindo os primeiros $ReportMaxRows registros." else ""
 
@@ -73,7 +80,8 @@ object ReportModel {
     val (q3, t3) = collectCapped(SalesPipeline.q3SalesByCategory(c))
     val q4 = SalesPipeline.q4Top5Employees(c).select("nome", "valor_total").collect()
     val (q5, t5) = collectCapped(SalesPipeline.q5SalesByPeriod(c))
-    val nEmp = q1.length; val nProd = q2.length; val nCat = q3.length; val nPer = q5.length
+    val nEmp = total(q1, t1); val nProd = total(q2, t2)
+    val nCat = total(q3, t3); val nPer = total(q5, t5)
     Report("Relatório de Vendas", Seq(
       Section("Total de vendas por funcionário",
         s"Total de vendas consolidado por funcionário ($nEmp funcionários)." + truncNote(t1),

@@ -2,13 +2,12 @@ package graft.etl
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI analog of the reference's `pipeline.py` (reference:
   * pipeline.py:7-99): run the full ET over the reference-layout CSVs,
-  * export the three cleaned tables as parquet, and print the five
-  * query results (the PDF rendering is presentation-only and out of
-  * engine scope — SURVEY.md §2.1 S9).
+  * export the three cleaned tables and the five report tables as
+  * parquet, render the one ReportModel as the HTML report and the
+  * reference-named PDF (SURVEY.md §2.1 S9), and print each report
+  * section's title, summary, header and first five rows.
   *
   * Usage: runMain graft.etl.RunSalesPipeline <csvDir> <outDir> [yyyy-MM-dd]
   */
@@ -21,7 +20,7 @@ object RunSalesPipeline {
 
     val t0 = System.nanoTime()
     val cleanedRaw = SalesPipeline.run(spark, csvDir, refDate)
-    // ~25 actions follow (writes, counts, shows, audits) — cache both
+    // ~20 actions follow (writes, collects, counts, audits) — cache both
     // forms once so the ETL DAG doesn't re-execute per action
     val cleaned = SalesPipeline.Cleaned(
       cleanedRaw.produtos.cache(), cleanedRaw.vendas.cache(), cleanedRaw.empregados.cache())
@@ -29,27 +28,17 @@ object RunSalesPipeline {
     val bc = SalesPipeline.Cleaned(b.produtos.cache(), b.vendas.cache(), b.empregados.cache())
     SalesPipeline.writeParquet(bc, outDir)
     SalesPipeline.writeReportTables(bc, outDir)
-    // Both visual artifacts render the one ReportModel (built once):
-    // the HTML/SVG report and the reference-named PDF.
+    // The HTML report, the PDF and the console all render the one
+    // ReportModel (built once).
     val model = ReportModel.build(bc)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$outDir/report"))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$outDir/report/relatorio_vendas.html"),
-      SalesReportHtml.render(model).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$outDir/report/relatorio-final.pdf"),
-      SalesReportPdf.render(model))
+    SalesReportHtml.write(model, s"$outDir/report")
+    SalesReportPdf.write(model, s"$outDir/report")
     println(s"[pipeline] produtos=${bc.produtos.count()} vendas=${bc.vendas.count()} " +
       s"empregados=${bc.empregados.count()} -> $outDir")
-    Seq(
-      "Q1 vendas por funcionário" -> SalesPipeline.q1SalesByEmployee(bc),
-      "Q2 ticket médio por produto" -> SalesPipeline.q2AvgTicketByProduct(bc),
-      "Q3 vendas por categoria" -> SalesPipeline.q3SalesByCategory(bc),
-      "Q4 top 5 funcionários" -> SalesPipeline.q4Top5Employees(bc),
-      "Q5 vendas por período" -> SalesPipeline.q5SalesByPeriod(bc),
-    ).foreach { case (title, df) =>
-      println(s"== $title (${df.count()} rows)")
-      df.show(5, truncate = false)
+    model.sections.foreach { s =>
+      println(s"== ${s.title}")
+      println(s.summary)
+      (s.headers +: s.rows.take(5)).foreach(r => println(r.mkString(" | ")))
     }
     // audit side-channel (reference logs these per stage — SURVEY.md A6)
     println("== audit: imputation methods (vendas dates)")

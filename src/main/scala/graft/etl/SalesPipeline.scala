@@ -5,6 +5,8 @@ import java.time.LocalDate
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.SalesIo
+
 /** End-to-end hermetic pipeline mirroring the reference's 9 sequential
   * steps (reference: pipeline.py:71-96) minus environment provisioning:
   * CSV extract → clean → (in-engine catalog instead of Postgres) →
@@ -25,7 +27,6 @@ object SalesPipeline {
     */
   def run(spark: SparkSession, baseDir: String,
           referenceDate: LocalDate = LocalDate.now()): Cleaned = {
-    import graft.sources.SalesIo
     val paths = Seq("produtos.csv", "vendas.csv", "empregados.csv")
       .map(f => s"$baseDir/$f")
     paths.foreach(SalesIo.requireFile)
@@ -70,9 +71,9 @@ object SalesPipeline {
     */
   def writeParquet(c: Cleaned, outDir: String): Unit = {
     val b = loadBoundary(c)
-    b.produtos.write.mode("overwrite").parquet(s"$outDir/produtos.parquet")
-    b.empregados.write.mode("overwrite").parquet(s"$outDir/empregados.parquet")
-    b.vendas.write.mode("overwrite").parquet(s"$outDir/resumo-vendas.parquet")
+    SalesIo.write(b.produtos, "parquet", s"$outDir/produtos.parquet")
+    SalesIo.write(b.empregados, "parquet", s"$outDir/empregados.parquet")
+    SalesIo.write(b.vendas, "parquet", s"$outDir/resumo-vendas.parquet")
   }
 
   /** S9 made tabular: the five report tables as machine-checkable
@@ -89,10 +90,9 @@ object SalesPipeline {
       "top5_funcionarios" -> q4Top5Employees(c),
       "vendas_por_periodo" -> q5SalesByPeriod(c))
     tables.foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(s"$outDir/report/$name.parquet")
-      df.coalesce(1).write.mode("overwrite")
-        .option("header", "true").option("sep", ";")
-        .csv(s"$outDir/report/$name.csv")
+      SalesIo.write(df, "parquet", s"$outDir/report/$name.parquet")
+      // one part file keeps the csv copy in query order
+      SalesIo.write(df.coalesce(1), "csv", s"$outDir/report/$name.csv")
     }
   }
 

@@ -129,13 +129,10 @@ $body
 </body></html>"""
   }
 
-  /** Builds the model and renders (one collect per aggregate). */
-  def render(c: SalesPipeline.Cleaned): String = render(ReportModel.build(c))
-
   /** Renders and writes `relatorio_vendas.html` under outDir. */
-  def write(c: SalesPipeline.Cleaned, outDir: String): Unit = {
+  def write(r: Report, outDir: String): Unit = {
     Files.createDirectories(Paths.get(outDir))
     Files.write(Paths.get(s"$outDir/relatorio_vendas.html"),
-      render(c).getBytes(StandardCharsets.UTF_8))
+      render(r).getBytes(StandardCharsets.UTF_8))
   }
 }

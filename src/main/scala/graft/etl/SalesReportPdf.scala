@@ -310,14 +310,12 @@ object SalesReportPdf {
     out.toByteArray
   }
 
-  def render(c: SalesPipeline.Cleaned): Array[Byte] = render(ReportModel.build(c))
-
   /** Renders and writes `relatorio-final.pdf` (the reference artifact
     * name: save-data/save_data_pdf_report.py writes
     * pdf-files/relatorio-final.pdf) under outDir.
     */
-  def write(c: SalesPipeline.Cleaned, outDir: String): Unit = {
+  def write(r: Report, outDir: String): Unit = {
     Files.createDirectories(Paths.get(outDir))
-    Files.write(Paths.get(s"$outDir/relatorio-final.pdf"), render(c))
+    Files.write(Paths.get(s"$outDir/relatorio-final.pdf"), render(r))
   }
 }

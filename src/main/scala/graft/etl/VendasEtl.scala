@@ -94,13 +94,12 @@ object VendasEtl {
   def fillUnitValues(df: DataFrame, produtos: DataFrame): DataFrame = {
     val joined = df.join(
       broadcast(produtos.select("id_produto", "categoria")), Seq("id_produto"), "left")
-    val catMed = joined.filter(col("categoria").isNotNull)
-      .filter(col("valor_unitario").isNotNull)
-      .groupBy("categoria")
-      .agg(bround(percentile(col("valor_unitario"), lit(0.5)), 2).as("_cat_med"))
+    val catMed = groupMedian(
+      joined.filter(col("categoria").isNotNull), "categoria", "valor_unitario", "_cat_med")
     val s1 = joined.join(broadcast(catMed), Seq("categoria"), "left")
       .withColumn("valor_unitario",
-        when(col("valor_unitario").isNull && col("_cat_med").isNotNull, col("_cat_med"))
+        when(col("valor_unitario").isNull && col("_cat_med").isNotNull,
+          bround(col("_cat_med"), 2))
           .otherwise(col("valor_unitario")))
       .drop("_cat_med")
     val globMed = globalMedian(s1, "valor_unitario", "_g")

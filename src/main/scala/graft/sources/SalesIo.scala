@@ -58,11 +58,10 @@ object SalesIo {
     }.load()
   }
 
-  /** S8: parquet sink (reference: save_data_parquet.py:97-121). */
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
-
-  /** Generic format writers (parquet/orc/json/csv) for export breadth. */
+  /** S8 and the report sink: full-replace writers, parquet (reference:
+    * save_data_parquet.py:97-121) or the ';'-separated header CSV
+    * dialect that readCsv/read scan (also orc/json for export breadth).
+    */
   def write(df: DataFrame, format: String, path: String): Unit = format match {
     case "csv" => df.write.mode("overwrite")
       .option("header", "true").option("sep", ";").csv(path)

@@ -2,7 +2,7 @@ package graft.etl
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -53,6 +53,52 @@ class CleaningSpec extends AnyFunSuite {
     assert(nullRow.getString(1) === "first-null", "kept wrong null-key row")
     val oneRow = out.find(r => !r.isNullAt(0)).get
     assert(oneRow.getString(1) === "a", "kept wrong row for key 1")
+  }
+
+  /** Runs `f` over `lines` (header first) written as a ';'-CSV and
+    * scanned in 64-byte splits, so the rows land in several partitions
+    * in file order.
+    */
+  private def splitCsv(lines: Seq[String], schema: StructType)(f: DataFrame => Unit): Unit = {
+    val path = java.nio.file.Files.createTempDirectory("cleaning-spec").resolve("t.csv")
+    java.nio.file.Files.write(path, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    val keys = Seq("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    keys.foreach(spark.conf.set(_, "64"))
+    try {
+      val df = graft.sources.SalesIo.readCsv(spark, path.toString, schema)
+      assert(df.rdd.getNumPartitions >= 3, "the scan must split the file")
+      f(df)
+    } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  test("keep-first dedup keeps a key's first physical row across scan splits") {
+    val schema = StructType(Seq(StructField("k", IntegerType), StructField("v", StringType)))
+    val firsts = (1 to 20).map(i => s"$i;first-$i")
+    splitCsv("k;v" +: (firsts ++ Seq("2;copy-2", "7;copy-7", "1;copy-1")), schema) { df =>
+      val split = df.select(col("v"), spark_partition_id().as("p")).collect()
+        .map(r => r.getString(0) -> r.getInt(1)).toMap
+      for (k <- Seq(1, 2, 7))
+        assert(split(s"copy-$k") > split(s"first-$k"), s"key $k's copy is not in a later split")
+      val kept = Cleaning.dedupKeepFirst(df, Seq("k")).collect()
+        .map(r => r.getInt(0) -> r.getString(1)).toMap
+      assert(kept === (1 to 20).map(i => i -> s"first-$i").toMap)
+    }
+  }
+
+  test("blank employee ids in different splits backfill as max+1, max+2 in file order") {
+    val rows = (1 to 24).map { i =>
+      if (i % 8 == 4) s";blank-$i;Dev;30.0" else s"${i * 10};Emp $i;Dev;30.0"
+    }
+    splitCsv("id_empregado;nome;cargo;idade" +: rows, SalesSchemas.empregados) { df =>
+      val blanks = df.filter(col("id_empregado").isNull)
+        .select(spark_partition_id()).collect().map(_.getInt(0)).toSeq
+      assert(blanks.distinct.size === 3, s"blank ids share a split: $blanks")
+      val filled = EmpregadosEtl.fillMissingIds(Cleaning.withRowIdx(df))
+        .filter(col("nome").startsWith("blank-"))
+        .collect().map(r => r.getString(1) -> r.getInt(0)).toMap
+      assert(filled === Map("blank-4" -> 241, "blank-12" -> 242, "blank-20" -> 243))
+    }
   }
 
   test("regex-extract sort puts number-less names last (inf semantics)") {

@@ -18,7 +18,7 @@ class ReportPdfSpec extends AnyFunSuite {
   lazy val frames = SalesPipeline.loadBoundary(
     SalesPipeline.run(spark, "/root/reference/bases-de-dados", LocalDate.of(2025, 8, 27)))
 
-  lazy val pdf: Array[Byte] = SalesReportPdf.render(frames)
+  lazy val pdf: Array[Byte] = SalesReportPdf.render(ReportModel.build(frames))
 
   // windows-1252 decodes every byte we emit, so containment checks on
   // the decoded string see the text exactly as encoded.
@@ -86,7 +86,7 @@ class ReportPdfSpec extends AnyFunSuite {
       // the operand path would emit `0,16 0,50 0,72 rg`, corrupting every
       // content stream. The render must be byte-identical regardless.
       java.util.Locale.setDefault(java.util.Locale.forLanguageTag("pt-BR"))
-      val b = SalesReportPdf.render(frames)
+      val b = SalesReportPdf.render(ReportModel.build(frames))
       assert(java.util.Arrays.equals(b, baseline),
         "PDF bytes must not depend on the JVM default locale")
       assert("""\d,\d+ (rg|RG|re|w )""".r.findFirstIn(new String(b, "windows-1252")).isEmpty,
@@ -96,8 +96,7 @@ class ReportPdfSpec extends AnyFunSuite {
 
   test("write() produces the reference-named artifact") {
     val dir = "/tmp/graft_report_pdf_spec"
-    SalesReportPdf.write(SalesPipeline.loadBoundary(
-      SalesPipeline.run(spark, "/root/reference/bases-de-dados", LocalDate.of(2025, 8, 27))), dir)
+    SalesReportPdf.write(ReportModel.build(frames), dir)
     val p = java.nio.file.Paths.get(s"$dir/relatorio-final.pdf")
     assert(java.nio.file.Files.exists(p) && java.nio.file.Files.size(p) > 5000)
   }

@@ -12,8 +12,10 @@ class ReportSpec extends AnyFunSuite {
 
   lazy val spark = graft.GraftSession.build("report-spec", "4")
 
-  lazy val html: String = SalesReportHtml.render(SalesPipeline.loadBoundary(
+  lazy val model: ReportModel.Report = ReportModel.build(SalesPipeline.loadBoundary(
     SalesPipeline.run(spark, "/root/reference/bases-de-dados", LocalDate.of(2025, 8, 27))))
+
+  lazy val html: String = SalesReportHtml.render(model)
 
   test("report carries the reference's five sections in order") {
     val sections = Seq(
@@ -59,14 +61,16 @@ class ReportSpec extends AnyFunSuite {
     assert(perProduct.rows.length === ReportModel.ReportMaxRows)
     assert(perProduct.summary.contains("Exibindo os primeiros"),
       s"missing truncation note in: ${perProduct.summary}")
+    // the cap is not the total: a truncated summary says only "more than"
+    assert(perProduct.summary.contains(s"(mais de ${ReportModel.ReportMaxRows} produtos)"),
+      s"truncated summary states the cap as the total: ${perProduct.summary}")
     // untruncated sections carry no note
     assert(!report.sections(4).summary.contains("Exibindo"))
   }
 
   test("write() produces the html artifact") {
     val dir = "/tmp/graft_report_spec"
-    SalesReportHtml.write(SalesPipeline.loadBoundary(
-      SalesPipeline.run(spark, "/root/reference/bases-de-dados", LocalDate.of(2025, 8, 27))), dir)
+    SalesReportHtml.write(model, dir)
     val p = java.nio.file.Paths.get(s"$dir/relatorio_vendas.html")
     assert(java.nio.file.Files.exists(p) && java.nio.file.Files.size(p) > 5000)
   }
