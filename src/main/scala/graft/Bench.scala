@@ -99,40 +99,12 @@ object Bench {
 
   /** Compact-line labels for the substrate stages (the full names
     * ship on the detail line's `substrate_stages`): ≤7 chars each so
-    * the top-3 `sub` attribution fits the tail-window budget.
+    * the top-2 `sub` attribution fits the tail-window budget. The
+    * pinned stages' labels live on their `DedupOps.PinnedStages` rows.
     */
-  private[graft] val SubLabel = Map(
-    "shingle_memo"     -> "shingle",
-    "gram_memo"        -> "gram",
-    "banded_rows"      -> "banded",
-    "minhash_cand"     -> "mhcand",
-    "cluster_labels"   -> "labels",
-    "base_labels"      -> "blabels",
-    "base_keep"        -> "bkeep",
-    "simhash_sig"      -> "simsig",
-    "jaccard_md5_cand" -> "md5cand",
-    "neardup_cand"     -> "ndcand",
-    "bpe_merges"       -> "bpemrg",
-    "tok_ids"          -> "tokids",
-    "ftq_fv"           -> "ftqfv",
-    "ftq_model"        -> "ftqmdl",
-    "ivf_rank2"        -> "ivfrk2",
-    "ivf_rank2_t"      -> "ivfrkt",
-    "ann_brute"        -> "annbrt",
-    "pq_codes"         -> "pqcodes",
-    "pq_cbt"           -> "pqcbt",
-    "pq_codes_t"       -> "pqcodet",
-    "cents_t"          -> "centst",
-    "pqf_cb"           -> "pqfcb",
-    "pqf_codes"        -> "pqfcode",
-    "sem_asg"          -> "semasg",
-    "sem_labels"       -> "semlbl",
-    "sem_blabels"      -> "semblbl",
-    "sem_bkeep"        -> "sembkp",
-    "win_sel"          -> "winsel",
-    "win_kept"         -> "winkpt",
-    "win_ext"          -> "winext",
-    "packed"           -> "packed")
+  private[graft] val SubLabel: Map[String, String] =
+    Map("shingle_memo" -> "shingle", "gram_memo" -> "gram") ++
+      graft.operators.DedupOps.PinnedStages.map(s => s.name -> s.label)
 
   /** Committed-floor per-query minima for this SF
     * (`BENCH_LOCAL_<sfBase>.json` in the working directory), if any.
@@ -226,9 +198,9 @@ object Bench {
     // iteration drops the memo (clearCaches) so the rebuild is timed
     // from parquet; the LAST iteration's frame stays pinned and is
     // what the dedup queries below share, same as before. Each
-    // component (shingle memo, gram memo, the four pinned stage
-    // frames) is timed individually and the per-stage MINIMA ship on
-    // the detail line as `substrate_stages` — _substrate's aggregate
+    // component (shingle memo, gram memo, each pinned stage frame) is
+    // timed individually and the per-stage MINIMA ship on the detail
+    // line as `substrate_stages` — _substrate's aggregate
     // was only decomposable via stderr scrollback before (r13 judge),
     // so a 25→38 s drift could not be attributed from the artifact.
     val substrateStageRuns: Seq[Seq[(String, Double)]] = (1 to iters).map { _ =>
@@ -243,8 +215,7 @@ object Bench {
           graft.operators.DedupOps.materializeSubstrate(spark, sfDir) }
         val gram = timed("gram_memo") {
           graft.operators.PipelineOps.materializeGramSubstrate(spark, sfDir) }
-        // the shared pinned STAGE frames (minhash/sign-LSH candidates,
-        // simhash signatures, the gate's md5 PPJoin replica) are
+        // the shared pinned STAGE frames (DedupOps.PinnedStages) are
         // priced here for the same reason the substrate is: several
         // queries share each one, so their one-time cost must be
         // attributable instead of landing in whichever consumer runs
@@ -399,7 +370,7 @@ object Bench {
     // (31% of the r14 total), and the per-stage decomposition lived
     // only on the detail line — which the driver's compact-tail
     // capture drops, leaving the artifact blind on its own headline
-    // number (r14 judge). `sub` names the TOP-3 stages by their
+    // number (r14 judge). `sub` names the TOP-2 stages by their
     // per-iteration minima, labels shortened per SubLabel to respect
     // the tail-window budget (full names + full stage list stay on
     // the detail line). It rides on every candidate tier: the

@@ -22,8 +22,9 @@ object TimeQuery {
     val spark = GraftSession.build("graft-time-query")
     // only pre-build the (expensive) pinned stage frames when a
     // requested query actually consumes one — timing `scalars` should
-    // not pay a ~30 s dedup-stage warm-up. The consumer set lives
-    // beside the stage definitions (DedupOps.PinnedStageConsumers).
+    // not pay a ~30 s dedup-stage warm-up. The consumer set
+    // (DedupOps.PinnedStageConsumers) derives from the stage table's
+    // rows (DedupOps.PinnedStages).
     try {
       graft.operators.DedupOps.materializeSubstrate(spark, dir)
       if (names.exists(graft.operators.DedupOps.PinnedStageConsumers))

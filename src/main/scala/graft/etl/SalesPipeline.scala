@@ -29,7 +29,7 @@ object SalesPipeline {
           referenceDate: LocalDate = LocalDate.now()): Cleaned = {
     val paths = Seq("produtos.csv", "vendas.csv", "empregados.csv")
       .map(f => s"$baseDir/$f")
-    paths.foreach(SalesIo.requireFile)
+    paths.foreach(SalesIo.requireFile(spark, _))
     val produtos = ProdutosEtl.treat(
       SalesIo.readCsv(spark, paths(0), SalesSchemas.produtos))
     val vendas = VendasEtl.treat(

@@ -89,17 +89,15 @@ object DedupOps {
 
   /** Second memo tier: deterministic per-(session, dir) STAGE frames
     * that more than one registered query consumes in the same process
-    * — minhash band candidates (the production pair query AND the
-    * work-metric gate), simhash signatures (text_simhash, sim_pairs'
-    * candidate stage AND the gate), the gate's md5-hash PPJoin
-    * replica, and the sign-LSH embedding candidates (emb_neardup AND
-    * the gate). Without this the gate re-priced candidate generation
-    * the production queries had already paid in the same bench
-    * process (cand_work was the registry's most expensive sf1 entry,
-    * ~10% of the whole bench). Same lifecycle as the shingle
-    * substrate: pinned via OpCaches, dropped by clearCaches, and
-    * Bench materializes them inside the `_substrate` entry so the
-    * one-time cost stays attributable.
+    * — the [[PinnedStages]] table lists each one with its consumers
+    * (e.g. the minhash band candidates feed the production pair query
+    * AND the work-metric gate). Without this the gate re-priced
+    * candidate generation the production queries had already paid in
+    * the same bench process (cand_work was the registry's most
+    * expensive sf1 entry, ~10% of the whole bench). Same lifecycle as
+    * the shingle substrate: pinned via OpCaches, dropped by
+    * clearCaches, and Bench materializes them inside the `_substrate`
+    * entry so the one-time cost stays attributable.
     */
   private val stageCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
@@ -108,51 +106,115 @@ object DedupOps {
       build: => DataFrame): DataFrame =
     OpCaches.memoPinned(stageCache, (spark, dir, tag))(build)
 
-  /** Per-stage registry-consumer declarations — the single source the
-    * warm-up logic derives from. Declared beside the stage builders so
-    * adding a consumer (or renaming a registry key) updates ONE map;
-    * OperatorSpec asserts every name here exists in
-    * `SparkEntry.queries`, so a rename that forgets this map fails the
-    * build instead of silently mis-attributing the stage build cost to
-    * the renamed query's timing.
+  /** One row per pinned STAGE frame (see [[stageCache]]), in
+    * dependency order: the stage's name (its builder's `memoStage`
+    * tag), its ≤7-char compact bench label (`Bench.SubLabel`), the
+    * registry queries that consume it, and its builder. The warm-up
+    * (materializePinnedStages), TimeQuery's warm-up rule and the bench
+    * labels all derive from this table. OperatorSpec asserts every
+    * consumer exists in `SparkEntry.queries`, so a registry-key rename
+    * that forgets a row fails the build instead of silently
+    * mis-attributing the stage build cost to the renamed query's
+    * timing.
     */
-  private[graft] val StageConsumers: Map[String, Set[String]] = Map(
-    "banded_rows"      -> Set("dinc", "linc"),
-    "minhash_cand"     -> Set("mhl", "clus", "dkp", "cwork", "linc"),
-    "cluster_labels"   -> Set("clus", "dkp"),
-    "base_labels"      -> Set("linc"),
-    "base_keep"        -> Set("linc"),
-    "simhash_sig"      -> Set("smh", "simp", "cwork"),
-    "jaccard_md5_cand" -> Set("cwork"),
-    "neardup_cand"     -> Set("endup", "cwork"),
-    "bpe_merges"       -> Set("bpenc", "tid", "tdc", "tdata", "pksq", "pkw", "pki", "ftd", "tkf", "tvu", "pke"),
-    "tok_ids"          -> Set("tid", "tdc", "tdata", "pksq", "pkw", "pki", "ftd", "tkf", "tvu", "pke"),
-    "ftq_fv"           -> Set("ftq", "ftd"),
-    "ftq_model"        -> Set("ftq", "ftd"),
-    "ivf_rank2"        -> Set("arcl", "ivq", "pqt"),
-    "ivf_rank2_t"      -> Set("ivft", "pqf"),
-    "ann_brute"        -> Set("arcl", "ivft", "ivq", "pqt", "pqf"),
-    "pq_codes"         -> Set("ivq"),
-    "pq_cbt"           -> Set("pqt"),
-    "pq_codes_t"       -> Set("pqt"),
-    "cents_t"          -> Set("ivft", "pqf"),
-    "pqf_cb"           -> Set("pqf"),
-    "pqf_codes"        -> Set("pqf"),
-    "sem_asg"          -> Set("sdd", "sinc", "sref", "tdata", "pksq", "pkw", "pki", "ftd", "pke"),
-    "sem_labels"       -> Set("sdd", "tdata", "pksq", "pkw", "pki", "ftd", "pke"),
-    "sem_blabels"      -> Set("sref"),
-    "sem_bkeep"        -> Set("sref"),
-    "win_sel"          -> Set("wfp", "wci"),
-    "win_kept"         -> Set("wsim", "winc", "wci"),
-    "win_ext"          -> Set("wext", "wct", "wci"),
-    "packed"           -> Set("pksq", "pkw", "pke"))
+  private[graft] final case class Stage(name: String, label: String,
+      consumers: Set[String], build: (SparkSession, String) => DataFrame)
+
+  private[graft] val PinnedStages: Seq[Stage] = Seq(
+    // the standing LSH band index FIRST: the candidate self-join
+    // below and the delta probes all read it
+    Stage("banded_rows", "banded", Set("dinc", "linc"), bandedRows(_, _)),
+    Stage("minhash_cand", "mhcand", Set("mhl", "clus", "dkp", "cwork", "linc"),
+      minhashCandidates(_, _)),
+    // cluster_labels AFTER minhash_cand: it consumes the candidate
+    // memo, so this order keeps each stage's timing its own (the
+    // labels entry prices propagation, not candidate gen)
+    Stage("cluster_labels", "labels", Set("clus", "dkp"), clusterLabels(_, _)),
+    // base_* after minhash_cand (both read the verified-pair path
+    // through the candidate memo) and base_keep after base_labels,
+    // so each entry prices only its own construction
+    Stage("base_labels", "blabels", Set("linc"), baseLabels(_, _)),
+    Stage("base_keep", "bkeep", Set("linc"), baseKeep(_, _)),
+    Stage("simhash_sig", "simsig", Set("smh", "simp", "cwork"), simhashSignatures(_, _)),
+    Stage("jaccard_md5_cand", "md5cand", Set("cwork"), jaccardMd5Candidates(_, _)),
+    Stage("neardup_cand", "ndcand", Set("endup", "cwork"),
+      EmbeddingOps.neardupCandidates(_, _)),
+    // the learned BPE merge table: training replayed per-encode was
+    // the r16 audit's one weak mark — the stage prices the 8-round
+    // driver loop once, and every encoder reads the pinned rules
+    Stage("bpe_merges", "bpemrg",
+      Set("bpenc", "tid", "tdc", "tdata", "pksq", "pkw", "pki", "ftd", "tkf", "tvu", "pke"),
+      TextOps.bpeMergeTable(_, _)),
+    // the encoded corpus AFTER bpe_merges (its build reads the merge
+    // table and the id law derived from it), so this entry prices
+    // exactly the one corpus-scale encode every token consumer
+    // (tid/tdc/tdata/pksq) previously re-paid per query
+    Stage("tok_ids", "tokids",
+      Set("tid", "tdc", "tdata", "pksq", "pkw", "pki", "ftd", "tkf", "tvu", "pke"),
+      TextOps.bpeTokenIdsStage(_, _)),
+    // the corpus feature frame BEFORE the model (the trainer reads
+    // it), so ftq_model prices training alone and the classifier
+    // gate / gated composite score cached features
+    Stage("ftq_fv", "ftqfv", Set("ftq", "ftd"), QualityOps.ftqFeatureStage(_, _)),
+    // the trained quality model — FtqRounds of driver-loop training
+    // priced once here (the ivft/bpe_merges discipline); the gated
+    // composite collects the KB-sized result
+    Stage("ftq_model", "ftqmdl", Set("ftq", "ftd"), QualityOps.ftqModelStage(_, _)),
+    // the clustered corpus' seed nprobe-2 assignment FIRST (its
+    // arank=1 rows are the clustered corpus every later ANN stage
+    // derives from), then the exact brute reference the five recall
+    // gates share — so pq/cents builds below price only their own
+    // tier
+    Stage("ivf_rank2", "ivfrk2", Set("arcl", "ivq", "pqt"), EmbeddingOps.rankedSeedStage(_, _)),
+    Stage("ann_brute", "annbrt", Set("arcl", "ivft", "ivq", "pqt", "pqf"),
+      EmbeddingOps.bruteClusteredStage(_, _)),
+    Stage("pq_codes", "pqcodes", Set("ivq"), EmbeddingOps.pqCodes(_, _)),
+    // pq_cbt BEFORE pq_codes_t: the trained index encodes against
+    // the trained codebook, so this order prices training and
+    // re-encoding separately
+    Stage("pq_cbt", "pqcbt", Set("pqt"), EmbeddingOps.pqCodebookTrained(_, _)),
+    Stage("pq_codes_t", "pqcodet", Set("pqt"), EmbeddingOps.pqCodesTrained(_, _)),
+    // the fully-trained stack, in dependency order: coarse training,
+    // then codebooks on the trained residuals, then the code index —
+    // so each entry prices exactly its own tier
+    Stage("cents_t", "centst", Set("ivft", "pqf"), EmbeddingOps.centroidsTrainedStage(_, _)),
+    // the trained assignment AFTER cents_t (it assigns against the
+    // trained centroids) and before its pqf consumers
+    Stage("ivf_rank2_t", "ivfrkt", Set("ivft", "pqf"), EmbeddingOps.rankedTrainedStage(_, _)),
+    Stage("pqf_cb", "pqfcb", Set("pqf"), EmbeddingOps.pqfCodebook(_, _)),
+    Stage("pqf_codes", "pqfcode", Set("pqf"), EmbeddingOps.pqfCodes(_, _)),
+    // after cents_t: the cell membership assigns against the trained
+    // centroids, so this entry prices only the N×K assignment;
+    // blabels/bkeep after sem_asg in dependency order so each prices
+    // its own construction (base pair fixpoint, then the election)
+    Stage("sem_asg", "semasg",
+      Set("sdd", "sinc", "sref", "tdata", "pksq", "pkw", "pki", "ftd", "pke"),
+      EmbeddingOps.semanticMembers(_, _)),
+    // after sem_asg: the from-scratch verdict chain (pairs → CC
+    // fixpoint → election) reads the membership memo, so this entry
+    // prices only the verdict construction (r17 finding #3)
+    Stage("sem_labels", "semlbl", Set("sdd", "tdata", "pksq", "pkw", "pki", "ftd", "pke"),
+      EmbeddingOps.semanticVerdicts(_, _)),
+    Stage("sem_blabels", "semblbl", Set("sref"), EmbeddingOps.semBaseLabels(_, _)),
+    Stage("sem_bkeep", "sembkp", Set("sref"), EmbeddingOps.semBaseKeep(_, _)),
+    // the winnowing standing state in dependency order — the
+    // positioned postings index, the df-capped kept index derived
+    // from it, then the converged MOSS extent frame built from both
+    // (r17 finding #2) — so each entry prices its own construction
+    Stage("win_sel", "winsel", Set("wfp", "wci"), TextOps.winnowSelectionStage(_, _)),
+    Stage("win_kept", "winkpt", Set("wsim", "winc", "wci"), TextOps.winnowKept(_, _)),
+    Stage("win_ext", "winext", Set("wext", "wct", "wci"), TextOps.winnowExtentsStage(_, _)),
+    // last: the packed trainer windows read tok_ids AND the semantic
+    // verdict stages (survivor chain), so every dependency above has
+    // already been priced — this entry is the packing alone
+    Stage("packed", "packed", Set("pksq", "pkw", "pke"), PipelineOps.packedStage(_, _)))
 
   /** Registered queries that consume at least one pinned STAGE frame —
     * TimeQuery uses it to decide whether the stage warm-up is owed
-    * before timing. Derived from [[StageConsumers]], never edited
+    * before timing. Derived from [[PinnedStages]], never edited
     * directly.
     */
-  val PinnedStageConsumers: Set[String] = StageConsumers.values.flatten.toSet
+  val PinnedStageConsumers: Set[String] = PinnedStages.flatMap(_.consumers).toSet
 
   /** Memoized shingle substrate — race-safety rationale lives on
     * OpCaches.memoPinned (shared with the gram substrate).
@@ -168,118 +230,31 @@ object DedupOps {
   def materializeSubstrate(spark: SparkSession, dir: String): Unit =
     shingleRowsCached(spark, dir).write.format("noop").mode("overwrite").save()
 
-  /** Force the shared pinned STAGE frames (see [[stageCache]]) for
-    * `dir` — the same explicit warm-up [[materializeSubstrate]] gives
+  /** Force the shared pinned STAGE frames ([[PinnedStages]], in table
+    * order) for `dir` — the same explicit warm-up [[materializeSubstrate]] gives
     * the shingle frame, so Bench prices their one-time construction
     * inside `_substrate` instead of inside whichever consumer runs
     * first. Order matters only in that the md5 PPJoin replica reads
     * the shingle substrate — call after materializeSubstrate.
     */
-  def materializePinnedStages(spark: SparkSession, dir: String): Seq[(String, Double)] = {
-    // THUNKS, not frames: a memoStage call BUILDS on first invocation,
-    // and cluster_labels' build runs a driver loop with per-round
-    // actions — constructing the frame while assembling this list
-    // would do that work BEFORE the timed loop below (measured:
-    // minhash_cand "cost" 0.07 s because the loop had already built
-    // it), silently under-reporting _substrate. cluster_labels AFTER
-    // minhash_cand: it consumes the candidate memo, so this order
-    // keeps each stage's timing its own (the labels entry prices
-    // propagation, not candidate gen).
-    val stages = Seq[(String, () => DataFrame)](
-      // the standing LSH band index FIRST: the candidate self-join
-      // below and the delta probes all read it
-      "banded_rows" -> (() => bandedRows(spark, dir)),
-      "minhash_cand" -> (() => minhashCandidates(spark, dir)),
-      "cluster_labels" -> (() => clusterLabels(spark, dir)),
-      // base_* after minhash_cand (both read the verified-pair path
-      // through the candidate memo) and base_keep after base_labels,
-      // so each entry prices only its own construction
-      "base_labels" -> (() => baseLabels(spark, dir)),
-      "base_keep" -> (() => baseKeep(spark, dir)),
-      "simhash_sig" -> (() => simhashSignatures(spark, dir)),
-      "jaccard_md5_cand" -> (() => jaccardMd5Candidates(spark, dir)),
-      "neardup_cand" -> (() => EmbeddingOps.neardupCandidates(spark, dir)),
-      // the learned BPE merge table: training replayed per-encode was
-      // the r16 audit's one weak mark — the stage prices the 8-round
-      // driver loop once, and every encoder reads the pinned rules
-      "bpe_merges" -> (() => TextOps.bpeMergeTable(spark, dir)),
-      // the encoded corpus AFTER bpe_merges (its build reads the merge
-      // table and the id law derived from it), so this entry prices
-      // exactly the one corpus-scale encode every token consumer
-      // (tid/tdc/tdata/pksq) previously re-paid per query
-      "tok_ids" -> (() => TextOps.bpeTokenIdsStage(spark, dir)),
-      // the corpus feature frame BEFORE the model (the trainer reads
-      // it), so ftq_model prices training alone and the classifier
-      // gate / gated composite score cached features
-      "ftq_fv" -> (() => QualityOps.ftqFeatureStage(spark, dir)),
-      // the trained quality model — FtqRounds of driver-loop training
-      // priced once here (the ivft/bpe_merges discipline); the gated
-      // composite collects the KB-sized result
-      "ftq_model" -> (() => QualityOps.ftqModelStage(spark, dir)),
-      // the clustered corpus' seed nprobe-2 assignment FIRST (its
-      // arank=1 rows are the clustered corpus every later ANN stage
-      // derives from), then the exact brute reference the five recall
-      // gates share — so pq/cents builds below price only their own
-      // tier
-      "ivf_rank2" -> (() => EmbeddingOps.rankedSeedStage(spark, dir)),
-      "ann_brute" -> (() => EmbeddingOps.bruteClusteredStage(spark, dir)),
-      "pq_codes" -> (() => EmbeddingOps.pqCodes(spark, dir)),
-      // pq_cbt BEFORE pq_codes_t: the trained index encodes against
-      // the trained codebook, so this order prices training and
-      // re-encoding separately
-      "pq_cbt" -> (() => EmbeddingOps.pqCodebookTrained(spark, dir)),
-      "pq_codes_t" -> (() => EmbeddingOps.pqCodesTrained(spark, dir)),
-      // the fully-trained stack, in dependency order: coarse training,
-      // then codebooks on the trained residuals, then the code index —
-      // so each entry prices exactly its own tier
-      "cents_t" -> (() => EmbeddingOps.centroidsTrainedStage(spark, dir)),
-      // the trained assignment AFTER cents_t (it assigns against the
-      // trained centroids) and before its pqf consumers
-      "ivf_rank2_t" -> (() => EmbeddingOps.rankedTrainedStage(spark, dir)),
-      "pqf_cb" -> (() => EmbeddingOps.pqfCodebook(spark, dir)),
-      "pqf_codes" -> (() => EmbeddingOps.pqfCodes(spark, dir)),
-      // after cents_t: the cell membership assigns against the trained
-      // centroids, so this entry prices only the N×K assignment;
-      // blabels/bkeep after sem_asg in dependency order so each prices
-      // its own construction (base pair fixpoint, then the election)
-      "sem_asg" -> (() => EmbeddingOps.semanticMembers(spark, dir)),
-      // after sem_asg: the from-scratch verdict chain (pairs → CC
-      // fixpoint → election) reads the membership memo, so this entry
-      // prices only the verdict construction (r17 finding #3)
-      "sem_labels" -> (() => EmbeddingOps.semanticVerdicts(spark, dir)),
-      "sem_blabels" -> (() => EmbeddingOps.semBaseLabels(spark, dir)),
-      "sem_bkeep" -> (() => EmbeddingOps.semBaseKeep(spark, dir)),
-      // the winnowing standing state in dependency order — the
-      // positioned postings index, the df-capped kept index derived
-      // from it, then the converged MOSS extent frame built from both
-      // (r17 finding #2) — so each entry prices its own construction
-      "win_sel" -> (() => TextOps.winnowSelectionStage(spark, dir)),
-      "win_kept" -> (() => TextOps.winnowKept(spark, dir)),
-      "win_ext" -> (() => TextOps.winnowExtentsStage(spark, dir)),
-      // last: the packed trainer windows read tok_ids AND the semantic
-      // verdict stages (survivor chain), so every dependency above has
-      // already been priced — this entry is the packing alone
-      "packed" -> (() => PipelineOps.packedStage(spark, dir)))
-    // every pinned stage must have a consumer declaration and vice
-    // versa — [[StageConsumers]] is what TimeQuery's warm-up logic
-    // derives from, so a drifted entry would silently mis-attribute
-    // the stage build cost
-    require(stages.map(_._1).toSet == StageConsumers.keySet,
-      s"pinned stages ${stages.map(_._1)} drifted from StageConsumers " +
-        s"${StageConsumers.keySet}")
-    stages.map { case (name, mk) =>
+  def materializePinnedStages(spark: SparkSession, dir: String): Seq[(String, Double)] =
+    PinnedStages.map { s =>
       // per-stage timings RETURNED so Bench can put the attribution
       // in the detail JSON (r13 judge: _substrate's aggregate cost
       // was only decomposable via stderr scrollback); the stderr echo
-      // stays for interactive runs. The thunk runs INSIDE the timer so
-      // driver-side build work (iterative stages) is priced too.
+      // stays for interactive runs. `build` runs INSIDE the timer: a
+      // memoStage call builds on first invocation, and iterative
+      // builders (cluster_labels' driver loop) run per-round actions
+      // at construction, so building outside it would under-report
+      // _substrate.
       val t0 = System.nanoTime()
-      mk().write.format("noop").mode("overwrite").save()
+      s.build(spark, dir).write.format("noop").mode("overwrite").save()
       val sec = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[bench] pinned stage $name: $sec%.2f s")
-      name -> sec
+      require(stageCache.contains((spark, dir, s.name)),
+        s"pinned stage ${s.name}: its builder memoized under another memoStage tag")
+      System.err.println(f"[bench] pinned stage ${s.name}: $sec%.2f s")
+      s.name -> sec
     }
-  }
 
   /** Unpersist the per-call transient frames (candidate sets, pre-sort
     * results) that the dedup/ANN operators persist internally, keeping

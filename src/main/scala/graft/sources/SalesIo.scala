@@ -22,10 +22,15 @@ object SalesIo {
       .schema(schema)
       .csv(path)
 
-  /** S4: file-existence guard (reference: et_produtos.py:32-43). */
-  def requireFile(path: String): Unit =
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
+  /** S4: file-existence guard (reference: et_produtos.py:32-43),
+    * asked of the path's Hadoop FileSystem under the session's conf, so
+    * every path Spark reads passes (`file://`, `hdfs://`, `s3a://`, …).
+    */
+  def requireFile(spark: SparkSession, path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p))
       throw new java.io.FileNotFoundException(s"Arquivo CSV não encontrado: $path")
+  }
 
   /** Generic format readers for the cleaned-table round trips. */
   def read(spark: SparkSession, format: String, path: String,

@@ -53,24 +53,15 @@ class BenchLineSpec extends AnyFunSuite {
   }
 
   test("SubLabel covers every pinned substrate stage with a short label") {
-    // Bench.SubLabel.getOrElse(n, n) falls back to the RAW stage name;
-    // a stage added without a label entry whose min lands in the top-3
-    // would put its full name (up to 16 chars) into `sub`, overflow
-    // the tail window, and Bench would silently drop to the no-sub
-    // candidate — reintroducing exactly the _substrate blindness the
-    // field exists to fix, while the worst-case budget test above
-    // (which models only SubLabel VALUES) kept passing. The universe
-    // is the two shingle substrates plus the StageConsumers keyset —
-    // the same single source materializePinnedStages requires against.
-    val stageUniverse = Set("shingle_memo", "gram_memo") ++
-      graft.operators.DedupOps.StageConsumers.keySet
-    val missing = stageUniverse -- graft.Bench.SubLabel.keySet
-    assert(missing.isEmpty,
-      s"pinned stages without a SubLabel entry: $missing — add a ≤7-char label")
-    val stale = graft.Bench.SubLabel.keySet -- stageUniverse
-    assert(stale.isEmpty,
-      s"SubLabel entries for stages that no longer exist: $stale")
-    graft.Bench.SubLabel.values.foreach(l =>
+    // every pinned stage has a label by construction: SubLabel is the
+    // two shingle substrates plus the DedupOps.PinnedStages rows. The
+    // labels are the keys of the compact line's `sub` object, so two
+    // stages sharing one would emit duplicate JSON keys; and the
+    // worst-case budget above models ≤7-char labels
+    val labels = graft.Bench.SubLabel.values.toSeq
+    assert(labels.distinct.size === labels.size,
+      s"SubLabel labels shared by several stages: ${labels.diff(labels.distinct)}")
+    labels.foreach(l =>
       assert(l.length <= 7, s"SubLabel '$l' exceeds 7 chars — the " +
         "worst-case budget above models ≤7-char labels"))
   }

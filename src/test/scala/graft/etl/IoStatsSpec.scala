@@ -30,9 +30,9 @@ class IoStatsSpec extends AnyFunSuite {
 
   test("file-existence guard raises like the reference") {
     intercept[java.io.FileNotFoundException] {
-      SalesIo.requireFile("/nonexistent/produtos.csv")
+      SalesIo.requireFile(spark, "/nonexistent/produtos.csv")
     }
-    SalesIo.requireFile("/root/reference/bases-de-dados/produtos.csv")
+    SalesIo.requireFile(spark, "/root/reference/bases-de-dados/produtos.csv")
   }
 
   test("profile reports rows/nulls/mean/median per column") {

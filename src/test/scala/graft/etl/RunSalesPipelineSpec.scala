@@ -1,6 +1,7 @@
 package graft.etl
 
 import java.nio.file.{Files, Path, Paths}
+import java.time.LocalDate
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,8 +21,7 @@ class RunSalesPipelineSpec extends AnyFunSuite {
 
   lazy val outDir: String = Files.createTempDirectory("run-sales-pipeline-out").toString
 
-  /** Runs the CLI once and returns its stdout. */
-  lazy val stdout: String = {
+  lazy val csvDir: Path = {
     val csvDir = Files.createTempDirectory("run-sales-pipeline-in")
     write(csvDir, "produtos.csv", "id_produto;nome;preco;categoria",
       "1;Produto 1;10.0;A", "2;Produto 2;;A", "3;Caneta;20.0;B", "3;Caneta;20.0;B",
@@ -34,6 +34,11 @@ class RunSalesPipelineSpec extends AnyFunSuite {
     write(csvDir, "empregados.csv", "id_empregado;nome;cargo;idade",
       "1;Ana;Vendedor;30.0", "2;;Gerente;75.0", "3;Caio;;", "1;Ana;Vendedor;30.0",
       ";Duda;Vendedor;40.0")
+    csvDir
+  }
+
+  /** Runs the CLI once and returns its stdout. */
+  lazy val stdout: String = {
     val buf = new java.io.ByteArrayOutputStream()
     Console.withOut(new java.io.PrintStream(buf, true, "UTF-8")) {
       RunSalesPipeline.main(Array(csvDir.toString, outDir, "2024-01-01"))
@@ -94,5 +99,20 @@ class RunSalesPipelineSpec extends AnyFunSuite {
     val html = new String(
       Files.readAllBytes(Paths.get(s"$outDir/report/relatorio_vendas.html")), "UTF-8")
     assert(html.contains("Relatório de Vendas"))
+  }
+
+  test("run reads a file:// base dir like the plain path and still guards missing files") {
+    val date = LocalDate.of(2024, 1, 1)
+    def rows(c: SalesPipeline.Cleaned) =
+      Seq(c.produtos, c.vendas, c.empregados).map(_.collect().map(_.toString).sorted.toSeq)
+    val plain = rows(SalesPipeline.run(spark, csvDir.toString, date))
+    assert(plain.forall(_.nonEmpty))
+    assert(rows(SalesPipeline.run(spark, "file://" + csvDir, date)) === plain)
+    val partial = Files.createTempDirectory("run-sales-pipeline-partial")
+    Files.copy(csvDir.resolve("produtos.csv"), partial.resolve("produtos.csv"))
+    val e = intercept[java.io.FileNotFoundException] {
+      SalesPipeline.run(spark, "file://" + partial, date)
+    }
+    assert(e.getMessage.startsWith("Arquivo CSV não encontrado: file://"), e.getMessage)
   }
 }

@@ -1400,13 +1400,26 @@ class OperatorSpec extends AnyFunSuite {
 
   test("pinned-stage consumer declarations stay in sync with the registry") {
     // the warm-up attribution logic (TimeQuery, Bench _substrate)
-    // derives from DedupOps.StageConsumers; a registry-key rename
-    // that forgets the map would silently mis-attribute the stage
-    // build cost to the renamed query's timing — fail the build
-    // instead
+    // derives from the DedupOps.PinnedStages consumer sets; a
+    // registry-key rename that forgets a row would silently
+    // mis-attribute the stage build cost to the renamed query's
+    // timing — fail the build instead
     val unknown = graft.operators.DedupOps.PinnedStageConsumers
       .diff(graft.SparkEntry.queries.keySet)
     assert(unknown.isEmpty,
-      s"StageConsumers names not in SparkEntry.queries (stale rename?): $unknown")
+      s"PinnedStages consumer names not in SparkEntry.queries (stale rename?): $unknown")
+  }
+
+  test("materializePinnedStages builds every PinnedStages row once, in table order") {
+    // returning at all means each row's require held: after its build,
+    // the stage memo holds the row's own name, so no builder memoizes
+    // under a tag its row does not declare
+    val timed = DedupOps.materializePinnedStages(spark, sf)
+    val names = timed.map(_._1)
+    assert(names === DedupOps.PinnedStages.map(_.name))
+    assert(names.distinct === names, s"duplicate stage names: ${names.diff(names.distinct)}")
+    timed.foreach { case (n, sec) =>
+      assert(!sec.isNaN && !sec.isInfinite && sec >= 0, s"$n timed at $sec s")
+    }
   }
 }
