@@ -13,7 +13,9 @@ object PlanDump {
     val spark = GraftSession.build("graft-plan-dump")
     names.foreach { n =>
       println(s"========== $n")
-      SparkEntry.queries(n)(spark, dir).explain("formatted")
+      val fn = SparkEntry.query(n).getOrElse(
+        sys.error(s"unknown query '$n' (not a live key and not in scripts/renames.json)"))
+      fn(spark, dir).explain("formatted")
     }
     spark.stop()
   }

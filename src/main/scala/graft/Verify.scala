@@ -1,14 +1,15 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
   * Optional extra args name specific queries (dev iteration: dump +
-  * check one operator without the full 95-query sweep); the dumped
-  * oracle_sql.json is restricted to the selection so scripts/check.py
-  * checks exactly what was dumped. The driver's 2-arg call is the
-  * full sweep, unchanged.
+  * check one operator without sweeping every SparkEntry.Registry row);
+  * the dumped oracle_sql.json is restricted to the selection so
+  * scripts/check.py checks exactly what was dumped. The driver's 2-arg
+  * call is the full sweep, unchanged.
   */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -25,6 +26,12 @@ object Verify {
     val selected =
       if (only.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter { case (n, _) => only(n) }
+    // recursive delete, children before their directory
+    def deleteTree(root: Path): Unit = {
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+      finally walk.close()
+    }
     val spark = GraftSession.build("graft-verify")
     new java.io.File(outDir).mkdirs()
     // full sweep into a reused outDir: drop stale result dirs from
@@ -41,24 +48,14 @@ object Verify {
           .exists(c => c.getName == "_SUCCESS" || c.getName.endsWith(".parquet")))
         .foreach { stale =>
           System.err.println(s"[verify] removing stale result dir: $stale")
-          import scala.jdk.CollectionConverters._
-          val walk = java.nio.file.Files.walk(stale.toPath)
-          try walk.iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-          finally walk.close()
+          deleteTree(stale.toPath)
         }
     }
     selected.foreach { case (name, fn) =>
       // clear any previous run's output first: a query that now throws
       // must not leave stale parquet behind for the gate to "pass" on
-      val dest = java.nio.file.Paths.get(s"$outDir/$name")
-      if (java.nio.file.Files.exists(dest)) {
-        import scala.jdk.CollectionConverters._
-        val walk = java.nio.file.Files.walk(dest)
-        try walk.iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-        finally walk.close()
-      }
+      val dest = Paths.get(s"$outDir/$name")
+      if (Files.exists(dest)) deleteTree(dest)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

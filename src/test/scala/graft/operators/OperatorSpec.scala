@@ -481,8 +481,13 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("every query has an oracle — no rows-only queries left") {
-    val rowsOnly = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(rowsOnly.isEmpty, s"unexpected rows-only queries: $rowsOnly")
+    val keys = SparkEntry.Registry.map(_.key).toSet
+    assert(SparkEntry.queries.keySet === keys)
+    assert(SparkEntry.oracleSql.keySet === keys)
+    assert(SparkEntry.queries.size === SparkEntry.Registry.size)
+    assert(SparkEntry.oracleSql.size === SparkEntry.Registry.size)
+    val blank = SparkEntry.Registry.filter(_.oracle.trim.isEmpty).map(_.key)
+    assert(blank.isEmpty, s"registry rows with blank oracle SQL: $blank")
   }
 
   // Exact n-gram dedup blocks on lang (cheap blocking); LSH and
