@@ -305,7 +305,7 @@ object Bench {
     val med = ("_substrate" -> substrate) +: adjusted.map { case (n, (m, _, _)) => n -> m }
     val mins = ("_substrate" -> (if (substrate < 0) -1.0 else substrateRuns.min)) +:
       adjusted.map { case (n, (_, mn, _)) => n -> mn }
-    def obj(kv: Seq[(String, Double)], f: Double => String = qs): String =
+    def obj(kv: Seq[(String, Double)], f: Double => String): String =
       kv.map { case (k, v) => s"\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
     val good = med.collect { case (_, v) if v >= 0 => v }
     val total = if (good.nonEmpty) good.sum else 0.0

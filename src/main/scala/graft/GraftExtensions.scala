@@ -8,8 +8,9 @@ import graft.functions.{CosineSimilarity, DotProduct, MinKDistinctLongs, MinKStr
 /** SparkSessionExtensions entry point: installs the engine's custom
   * Catalyst expressions as SQL functions at session build time —
   * the idiomatic deployment path for a cluster
-  * (`spark.sql.extensions=graft.GraftExtensions`) as opposed to the
-  * per-session VectorExprs.register call.
+  * (`spark.sql.extensions=graft.GraftExtensions`). It is the only
+  * place the SQL functions are registered; GraftSession.build
+  * installs it.
   *
   * Usage:
   *   SparkSession.builder().withExtensions(new GraftExtensions) …

@@ -33,9 +33,10 @@ import org.apache.spark.sql.SparkSession
   *   rule are live in every session (and every `newSession()` child)
   *   with zero per-session registration. Note getOrCreate reuses an
   *   existing session and IGNORES withExtensions — in-process callers
-  *   after a foreign builder won't get the analyzer hint rule (the
-  *   runtime-registration paths in AsOfJoinOps/VectorExprs still
-  *   cover the rest).
+  *   after a foreign builder get neither the analyzer hint rule nor
+  *   the SQL functions; `AsOfJoinOps.asof` still installs the as-of
+  *   strategy and rules at first use, and
+  *   `AsOfJoinOps.registerSqlSurface` the `asof_join` TVF.
   */
 object GraftSession {
   def build(appName: String, cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The reference's audit/statistics side-channel (SURVEY.md §2.4 A6):
@@ -17,8 +17,6 @@ object EtlStats {
     * columns mean/exact-median — the engine's data-quality dashboard.
     */
   def profile(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
     val numeric = df.schema.fields.filter(f =>
       f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]).map(_.name).toSet
     val rows = df.schema.fields.toIndexedSeq.map { f =>

@@ -143,12 +143,4 @@ object VectorExprs {
   /** Column-level API for the native dot product. */
   def dotProduct(a: Column, b: Column): Column =
     Bridge.column(DotProduct(Bridge.expression(a), Bridge.expression(b)))
-
-  /** Register `cosine_sim` / `dot_product` for SQL use on a session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    Bridge.registerFunction(spark, "cosine_sim",
-      exprs => CosineSimilarity(exprs(0), exprs(1)))
-    Bridge.registerFunction(spark, "dot_product",
-      exprs => DotProduct(exprs(0), exprs(1)))
-  }
 }

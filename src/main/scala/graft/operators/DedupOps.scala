@@ -21,19 +21,6 @@ import graft.sources.Tables
   */
 object DedupOps {
 
-  /** Word k-gram shingle set (distinct) as a single column expression
-    * — for unit tests and ad-hoc use on small inputs ONLY. The lambda
-    * runs interpreted (array HOFs skip codegen and per-element CSE),
-    * so production paths use `shingleRows` below instead.
-    */
-  def shingles(text: Column, k: Int = 3): Column = {
-    val toks = TextOps.tokens(text)
-    when(size(toks) >= k,
-      array_distinct(transform(sequence(lit(0), size(toks) - k),
-        i => concat_ws(" ", slice(toks, i + 1, lit(k))))))
-      .otherwise(array().cast("array<string>"))
-  }
-
   /** One row per DISTINCT k-gram shingle per document, plus the
     * document's distinct-shingle count `n` — the shared substrate for
     * both exact-Jaccard and MinHash dedup.
@@ -504,18 +491,6 @@ object DedupOps {
         .repartition(col("band"), col("bh"))
     }
 
-  /** Per-document (shingle-hash set, n) arrays over the full corpus —
-    * the verification side of the LSH index. verifyJaccard builds a
-    * candidate-pruned version of this inline; the streaming delta twin
-    * joins arriving docs against this full static form instead (every
-    * index doc is a potential match when the probe is unbounded).
-    */
-  private[graft] def shingleHashArrays(spark: SparkSession, dir: String): DataFrame =
-    shingleRowsCached(spark, dir)
-      .select(col("doc_id"), xxhash64(col("sh")).as("s"), col("n"))
-      .groupBy("doc_id")
-      .agg(collect_set(col("s")).as("ss"), first(col("n")).as("n"))
-
   /** The delta-doc predicate [[dedupDelta]] demos with — deterministic
     * so the DuckDB oracle can replay the split. In production the
     * delta is "today's shard"; here it is every fifth document.
@@ -728,9 +703,9 @@ object DedupOps {
       dedupDelta(spark, dir).select("doc_a", "doc_b"))
 
   /** [[labelMapping]]'s body over EXPLICIT frames — standing (id, lbl)
-    * labels and a (doc_a, doc_b) pair frame — so the streaming face
-    * (DocStream.StandingLabels) merges each micro-batch's pairs
-    * through the same contraction the batch refresh uses.
+    * labels and a (doc_a, doc_b) pair frame — so the semantic refresh
+    * (EmbeddingOps.semanticRefresh) merges its pairs through the same
+    * contraction the text refresh uses.
     */
   private[graft] def contractedMapping(standing: DataFrame, pairs: DataFrame): DataFrame = {
     val sub = pairs.select("doc_a", "doc_b")
@@ -745,83 +720,10 @@ object DedupOps {
     propagateLabels(lg)._1
   }
 
-  /** One streaming merge step: contract, converge, apply, and eagerly
-    * localCheckpoint the merged standing frame (it becomes the next
-    * batch's substitution base — without truncation every batch's plan
-    * would embed all previous batches' join trees). The streaming
-    * face's whole per-batch transaction, kept here so the operators
-    * package owns every standing-state mutation.
-    */
-  private[graft] def mergePairsIntoStanding(standing: DataFrame,
-      pairs: DataFrame): DataFrame =
-    OpCaches.localCheckpointTracked(
-      applyMapping(standing, contractedMapping(standing, pairs)))
-
-  /** The FULL refresh transaction over explicit standing state —
-    * labels AND retention verdicts: [[dedupKeepIncremental]]'s plan
-    * applied per micro-batch, plus ADMISSION of genuinely new
-    * documents. `freshQuality` carries the arriving shard's
-    * (doc_id, quality_score) rows — the transaction's only
-    * text-derived input, delta-sized by construction; docs absent
-    * from the standing verdict table enter as keep=true singletons
-    * with their fresh score (the common production case: a brand-new
-    * doc, pairless or about to be bridged by this batch's pairs).
-    * Touched clusters (standing label ∈ mapping nodes — exact, same
-    * argument as the batch refresh) then re-elect through the one
-    * shared [[keepVerdicts]] policy with quality read from the
-    * (admission-grown) standing table; untouched rows carry verbatim
-    * via one anti-join. Both merged frames localCheckpoint (they are
-    * the next batch's state). A cluster's verdict is recomputed
-    * exactly when its membership last changed, and verdicts are a
-    * pure function of (final membership, immutable scores), so N
-    * batched merges land on the batch refresh's verdict table —
-    * StreamingSpec pins it; OperatorSpec pins the fresh-admission
-    * fixture (new docs bridged into standing clusters) against the
-    * from-scratch chain.
-    */
-  private[graft] def mergeRefreshIntoStanding(standingLabels: DataFrame,
-      standingKeep: DataFrame, pairs: DataFrame,
-      freshQuality: DataFrame): (DataFrame, DataFrame) = {
-    val cols = Seq("doc_id", "cluster", "quality_score",
-      "keep", "kept_doc", "n_members").map(col)
-    // admission — checkpointed: singleton rows are read by several
-    // branches below, and their lineage carries the caller's quality
-    // scan
-    val singles = OpCaches.localCheckpointTracked(freshQuality
-      .join(standingKeep.select("doc_id"), Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("doc_id").as("cluster"),
-        col("quality_score"), lit(true).as("keep"),
-        col("doc_id").as("kept_doc"), lit(1L).as("n_members")))
-    val keep0 = standingKeep.select(cols: _*)
-      .unionByName(singles.select(cols: _*))
-    val m = OpCaches.track(contractedMapping(standingLabels, pairs))
-    val newLabels = OpCaches.localCheckpointTracked(
-      applyMapping(standingLabels, m))
-    val touched = newLabels
-      .join(m.select("lbl").distinct(), Seq("lbl"))
-      .select(col("id").as("doc_id"), col("lbl").as("cluster"))
-    // silent-drop guard (r16 advice): a touched doc scored NOWHERE —
-    // neither standing nor admitted this batch — would vanish from its
-    // cluster's verdict rows; fail loudly instead
-    val unscored = touched.select("doc_id")
-      .join(keep0.select("doc_id"), Seq("doc_id"), "left_anti")
-    require(unscored.isEmpty,
-      "refresh touched documents with neither a standing verdict nor a " +
-        "fresh quality row — pass the arriving shard's scores in freshQuality")
-    val scores = keep0.select(col("doc_id"), col("quality_score"))
-      .join(touched.select("doc_id"), Seq("doc_id"))
-    val untouched = keep0
-      .join(m.select(col("id").as("cluster")), Seq("cluster"), "left_anti")
-    val newKeep = OpCaches.localCheckpointTracked(
-      untouched.select(cols: _*)
-        .unionByName(keepVerdicts(touched, scores).select(cols: _*)))
-    (newLabels, newKeep)
-  }
-
   /** Apply a converged contracted mapping to a standing label frame:
     * one mapping join (relabel touched components) plus the mapping's
     * previously-unlabeled nodes appended — [[labelsIncrementalFrom]]'s
-    * body over explicit frames, shared with the streaming face.
+    * body over explicit frames, shared with the semantic refresh.
     */
   private[graft] def applyMapping(standing: DataFrame, m: DataFrame): DataFrame = {
     val relabeled = standing

@@ -940,87 +940,6 @@ object EmbeddingOps {
       .orderBy("vec_id", "j")
   }
 
-  /** The delta slice of the clustered corpus — the "arriving shard"
-    * the incremental encoder and its streaming face both consume
-    * (exposed for the StreamingSpec fixture).
-    */
-  private[graft] def pqDeltaVectors(spark: SparkSession, dir: String): DataFrame =
-    clusteredCorpus(spark, dir).filter(pqDeltaPred(col("vec_id")))
-
-  /** The incremental encoder's STANDING state collected driver-side:
-    * (coarse centroids, codebook), both derived from the base corpus
-    * and tiny by construction (K rows; K·m sub-vectors ≈ 4 KB) —
-    * exactly the state a production streaming encoder broadcasts to
-    * executors once per retrain.
-    */
-  private[graft] def pqStandingState(spark: SparkSession, dir: String)
-      : (Seq[(Long, Seq[Double])], Seq[(Long, Int, Seq[Double])]) = {
-    val base = clusteredCorpus(spark, dir).filter(!pqDeltaPred(col("vec_id")))
-    val cents = OpCaches.track(centroidsOn(base)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv")))
-    val cb = pqCodebook(pqResiduals(cents,
-      ivfRankedWith(base.filter(col("vec_id") < PqCodebookK), cents, 1)))
-    val c = cents.orderBy("cent_id").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
-    val k = cb.orderBy("j", "code").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2))).toSeq
-    (c, k)
-  }
-
-  /** ROW-LOCAL PQ encoding against collected standing state — the
-    * streaming serving path: coarse assignment is a literal-array fold
-    * over the K centroids (strict-greater cosine with ascending-id
-    * order ≡ the batch arank tie-break), the residual and the m
-    * per-sub-space L2 argmins (strict-less with ascending-code order ≡
-    * the batch min-id tie-break) are pure column expressions, so the
-    * SAME columns run on a streaming frame with no shuffle and no
-    * state. Identical IEEE op chains to the batch encoder (index-order
-    * dots, x/(a·b) cosine, (a−b)² folds), so codes match bit-for-bit —
-    * StreamingSpec pins stream ≡ batch pqCodesIncremental.
-    * vecs: (vec_id LONG, v ARRAY<DOUBLE>).
-    */
-  private[graft] def pqEncodeRowLocal(vecs: DataFrame,
-      cents: Seq[(Long, Seq[Double])],
-      cb: Seq[(Long, Int, Seq[Double])]): DataFrame = {
-    def dotC(a: Column, b: Column): Column =
-      aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-    val centArr = array(cents.sortBy(_._1).map { case (id, cv) =>
-      struct(lit(id).as("cent_id"), typedLit(cv).as("cv"))
-    }: _*)
-    val v = col("v")
-    val zero = struct(lit(Double.NegativeInfinity).as("c"),
-      lit(-1L).as("cent_id"), typedLit(Seq.empty[Double]).as("cv"))
-    val best = aggregate(centArr, zero, (acc, e) => {
-      val cv = e.getField("cv")
-      val cos = dotC(cv, v) / (sqrt(dotC(cv, cv)) * sqrt(dotC(v, v)))
-      when(cos > acc.getField("c"),
-        struct(cos.as("c"), e.getField("cent_id").as("cent_id"), cv.as("cv")))
-        .otherwise(acc)
-    })
-    val sub = 64 / PqSubspaces
-    def codesOf(r: Column): Column = array((0 until PqSubspaces).map { j =>
-      val rj = slice(r, j * sub + 1, sub)
-      val earr = array(cb.filter(_._2 == j).sortBy(_._1).map { case (code, _, sv) =>
-        struct(lit(code).as("code"), typedLit(sv).as("sv"))
-      }: _*)
-      val czero = struct(lit(Double.MaxValue).as("l2"), lit(-1L).as("code"))
-      val bc = aggregate(earr, czero, (acc, e) => {
-        val l2 = aggregate(zip_with(rj, e.getField("sv"), (a, b) => (a - b) * (a - b)),
-          lit(0.0), (x, y) => x + y)
-        when(l2 < acc.getField("l2"),
-          struct(l2.as("l2"), e.getField("code").as("code"))).otherwise(acc)
-      })
-      struct(lit(j.toLong).as("j"), bc.getField("code").as("code"))
-    }: _*)
-    vecs
-      .select(col("vec_id"), col("v"), best.as("b"))
-      .select(col("vec_id"), col("b.cent_id").as("cell"),
-        zip_with(col("v"), col("b.cv"), (x, c) => x - c).as("r"))
-      .select(col("vec_id"), col("cell"), explode(codesOf(col("r"))).as("jc"))
-      .select(col("vec_id"), col("cell"),
-        col("jc.j").as("j"), col("jc.code").as("code"))
-  }
-
   // ---- fully-trained IVF-PQ (trained coarse × trained codebooks) ----
 
   /** The fully-TRAINED PQ context: Lloyd-trained coarse centroids
@@ -1225,11 +1144,11 @@ object EmbeddingOps {
     * assigned to its Lloyd-trained coarse cell (arank = 1) with its
     * cosine to the winning centroid RETAINED, as a pinned MEMO STAGE:
     * the dedup analog of the `pq_codes` index, built once per refresh
-    * and probed by the from-scratch (`sdd`), incremental (`sinc`), and
-    * streaming (VecStream.semanticArrivals) consumers. Same fused
-    * assignment chain as [[ivfRankedWith]] (hoisted norms, index-order
-    * dots, desc-cosine/asc-id tie-break) so the cell partition is the
-    * one the search tier already uses — at 100 TB the corpus is
+    * and probed by the from-scratch (`sdd`) and incremental (`sinc`,
+    * `sref`) consumers. Same fused assignment chain as
+    * [[ivfRankedWith]] (hoisted norms, index-order dots,
+    * desc-cosine/asc-id tie-break) so the cell partition is the one
+    * the search tier already uses — at 100 TB the corpus is
     * written partitioned by this cell and dedup runs per-partition.
     */
   private[graft] def semanticMembers(spark: SparkSession, dir: String): DataFrame =
@@ -1376,51 +1295,12 @@ object EmbeddingOps {
         count(lit(1)).over(Window.partitionBy("cluster")))
   }
 
-  /** Collected trained-centroid state for the streaming probe — K rows
-    * (~16 KB at K=32 × 64 dims): the broadcast-once-per-retrain story
-    * at any corpus size, same discipline as [[pqStandingState]].
-    */
-  private[graft] def semanticStandingCentroids(spark: SparkSession,
-      dir: String): Seq[(Long, Seq[Double])] =
-    centroidsTrainedStage(spark, dir).orderBy("cent_id").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
-
-  /** The STANDING side of the streaming semantic probe — the cell
+  /** The STANDING side of the semantic refresh — the cell
     * membership minus the arriving shard (one delta definition shared
-    * with [[semanticDedupDelta]] so the faces cannot drift).
+    * with [[semanticDedupDelta]] so the two cannot drift).
     */
   private[graft] def semanticStandingMembers(spark: SparkSession, dir: String): DataFrame =
     semanticMembers(spark, dir).filter(!pqDeltaPred(col("vec_id")))
-
-  /** ROW-LOCAL cell assignment against collected centroids — the
-    * streaming twin of [[semanticMembers]]'s assignment: the same
-    * strict-greater/ascending-id literal-array fold as
-    * [[pqEncodeRowLocal]]'s coarse tier (≡ the batch desc-ccos/asc-id
-    * arank tie-break), identical IEEE chains, so cells — and the
-    * retained winning cosine — match the batch membership
-    * bit-for-bit. vecs: (vec_id, v); emits (vec_id, v, nrm, cell,
-    * ccos).
-    */
-  private[graft] def semanticAssignRowLocal(vecs: DataFrame,
-      cents: Seq[(Long, Seq[Double])]): DataFrame = {
-    def dotC(a: Column, b: Column): Column =
-      aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-    val centArr = array(cents.sortBy(_._1).map { case (id, cv) =>
-      struct(lit(id).as("cent_id"), typedLit(cv).as("cv"))
-    }: _*)
-    val v = col("v")
-    val zero = struct(lit(Double.NegativeInfinity).as("c"), lit(-1L).as("cent_id"))
-    val best = aggregate(centArr, zero, (acc, e) => {
-      val cv = e.getField("cv")
-      val cos = dotC(cv, v) / (sqrt(dotC(cv, cv)) * sqrt(dotC(v, v)))
-      when(cos > acc.getField("c"),
-        struct(cos.as("c"), e.getField("cent_id").as("cent_id"))).otherwise(acc)
-    })
-    vecs.select(col("vec_id"), col("v"),
-      sqrt(dotC(col("v"), col("v"))).as("nrm"), best.as("b"))
-      .select(col("vec_id"), col("v"), col("nrm"),
-        col("b.cent_id").as("cell"), col("b.c").as("ccos"))
-  }
 
   /** Incremental semantic-dup maintenance — the `pinc`/`dinc` analog
     * for SemDeDup: a delta shard of arriving vectors probes the
@@ -1491,67 +1371,12 @@ object EmbeddingOps {
     * corpus), survivors re-elect ONLY in touched clusters, untouched
     * clusters' verdict rows carry from the standing table verbatim,
     * and pairless delta vectors admit as keep singletons. Cell + ccos
-    * for delta vectors come from the membership index — in a live
-    * deployment the row-local assignment (semanticAssignRowLocal)
-    * computes the identical values at delta scale, so no corpus
-    * rescan is implied. Emits `reelected` in-row; the oracle derives
-    * the flag independently (cluster contains a delta-pair node) on
-    * top of the full from-scratch chain, so the hash gate pins merge ≡
-    * from-scratch AND the exact touched set.
+    * for delta vectors come from the membership index. Emits
+    * `reelected` in-row; the oracle derives the flag independently
+    * (cluster contains a delta-pair node) on top of the full
+    * from-scratch chain, so the hash gate pins merge ≡ from-scratch
+    * AND the exact touched set.
     */
-  /** The semantic tier's FULL refresh transaction over EXPLICIT
-    * standing state — [[semanticRefresh]]'s plan applied per
-    * micro-batch, plus ADMISSION of genuinely new vectors (the
-    * mergeRefreshIntoStanding contract): `arrivals` carries the
-    * batch's row-local (vec_id, cell, ccos) assignments, delta-sized
-    * by construction; vectors absent from the standing verdict table
-    * enter as keep=true singletons BEFORE the merge, so a pair
-    * bridging them in the same transaction re-elects over their
-    * admitted rows. Touched clusters re-elect through the one shared
-    * [[semanticElect]] policy with (cell, ccos) read from the
-    * admission-grown standing table (immutable per vector); untouched
-    * rows carry verbatim via one anti-join. A touched vector with
-    * neither a standing verdict nor an admission row fails loudly —
-    * silent row loss is the failure mode this guard kills. Both
-    * merged frames localCheckpoint (they are the next batch's state).
-    */
-  private[graft] def mergeSemanticIntoStanding(standingLabels: DataFrame,
-      standingKeep: DataFrame, pairs: DataFrame,
-      arrivals: DataFrame): (DataFrame, DataFrame) = {
-    val cols = Seq("vec_id", "cell", "ccos", "cluster", "keep",
-      "kept_vec", "n_members").map(col)
-    val singles = OpCaches.localCheckpointTracked(arrivals
-      .join(standingKeep.select("vec_id"), Seq("vec_id"), "left_anti")
-      .select(col("vec_id"), col("cell"), col("ccos"),
-        col("vec_id").as("cluster"), lit(true).as("keep"),
-        col("vec_id").as("kept_vec"), lit(1L).as("n_members")))
-    val keep0 = standingKeep.select(cols: _*)
-      .unionByName(singles.select(cols: _*))
-    val m = OpCaches.track(DedupOps.contractedMapping(standingLabels,
-      pairs.select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))))
-    val newLabels = OpCaches.localCheckpointTracked(
-      DedupOps.applyMapping(standingLabels, m))
-    val touched = newLabels
-      .join(m.select("lbl").distinct(), Seq("lbl"))
-      .select(col("id").as("vec_id"), col("lbl").as("cluster"))
-    val unscored = touched.select("vec_id")
-      .join(keep0.select("vec_id"), Seq("vec_id"), "left_anti")
-    require(unscored.isEmpty,
-      "semantic refresh touched vectors with neither a standing verdict " +
-        "nor an admission row this batch — pass the batch's row-local " +
-        "assignments in arrivals")
-    val feats = keep0.select(col("vec_id"), col("cell"), col("ccos"))
-      .join(touched.select("vec_id"), Seq("vec_id"))
-    val untouched = keep0
-      .join(m.select(col("id").as("cluster")), Seq("cluster"), "left_anti")
-    val reElect = semanticElect(
-      touched.join(feats, Seq("vec_id"))
-        .select(col("vec_id"), col("cell"), col("ccos"), col("cluster")))
-    val newKeep = OpCaches.localCheckpointTracked(
-      untouched.select(cols: _*).unionByName(reElect.select(cols: _*)))
-    (newLabels, newKeep)
-  }
-
   def semanticRefresh(spark: SparkSession, dir: String): DataFrame = {
     val memb = semanticMembers(spark, dir)
     val sLabels = semBaseLabels(spark, dir)

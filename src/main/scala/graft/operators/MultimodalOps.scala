@@ -159,17 +159,6 @@ object MultimodalOps {
     res
   }
 
-  /** MP4/ISO-BMFF: top-level boxes are 32-bit big-endian size + 4CC
-    * (size 1 = 64-bit extended size follows the type); the stream
-    * must open with `ftyp`. Walk to `moov`, then its children to
-    * `mvhd`, and read (timescale, whole-second duration) as the
-    * (width, height) stand-ins — the honest video analog of WAV's
-    * (rate, channels). mvhd version 0 carries 32-bit times, version 1
-    * 64-bit. Any structural violation → None, never throws.
-    */
-  private def mp4Dims(p: Array[Byte]): Option[(Int, Int)] =
-    mp4Mvhd(p).map { case (ts, dur) => (ts.toInt, (dur / ts).toInt) }
-
   /** Uniform frame-sample plan for the video stage: FrameSamples
     * presentation timestamps (movie-timescale units) spaced evenly
     * across the mvhd duration, rendered as a CSV string. The i-th
@@ -185,11 +174,15 @@ object MultimodalOps {
     (0L until k).map(i => (dur / k) * i + (dur % k) * i / k).mkString(",")
   }
 
-  private[operators] def mp4FrameTs(p: Array[Byte]): Option[String] =
-    mp4Mvhd(p).map { case (_, dur) => frameTsOf(dur) }
-
-  /** mvhd (timescale, raw duration in timescale units), with all the
-    * structural guards; dims/frame-sample both derive from this.
+  /** MP4/ISO-BMFF: top-level boxes are 32-bit big-endian size + 4CC
+    * (size 1 = 64-bit extended size follows the type); the stream
+    * must open with `ftyp`. Walk to `moov`, then its children to
+    * `mvhd`, and read (timescale, raw duration in timescale units).
+    * [[decodeOne]] takes (timescale, whole-second duration) as the
+    * (width, height) stand-ins — the honest video analog of WAV's
+    * (rate, channels) — and the frame-sample plan from the same box.
+    * mvhd version 0 carries 32-bit times, version 1 64-bit. Any
+    * structural violation → None, never throws.
     */
   private def mp4Mvhd(p: Array[Byte]): Option[(Long, Long)] = {
     def ascii(off: Int) = new String(p, off, 4, "US-ASCII")
@@ -485,9 +478,6 @@ object MultimodalOps {
     Some((w, h, channels, raw, stride))
   }
 
-  private[operators] def pngPixelMean(p: Array[Byte]): Option[Double] =
-    pngFeatures(p).map(_._1)
-
   /** (mean over all channel samples, ThumbEdge² nearest-neighbor
     * thumbnail mean) from one PNG decode. Both are integer channel
     * sums with a single final division — exact and order-free.
@@ -534,14 +524,10 @@ object MultimodalOps {
     * and averages |sample| normalized to [0,1] for 16-bit signed LE
     * and 8-bit unsigned PCM (audioFormat 1 only; compressed/float
     * formats fall through). None on any structural violation.
-    */
-  private[operators] def wavSampleMean(p: Array[Byte]): Option[Double] =
-    wavFeatures(p).map(_._1)
-
-  /** (mean |sample|, ThumbEdge²-point uniform downsample mean) from
-    * one pass over the PCM data chunk — the audio analog of the image
-    * resize stage (nearest-neighbor index map k·ns div T², same as the
-    * thumbnail's).
+    * Returns (mean |sample|, ThumbEdge²-point uniform downsample mean)
+    * from one pass over the PCM data chunk — the audio analog of the
+    * image resize stage (nearest-neighbor index map k·ns div T², same
+    * as the thumbnail's).
     */
   private[operators] def wavFeatures(p: Array[Byte]): Option[(Double, Double)] = {
     def ascii(off: Int) = new String(p, off, 4, "US-ASCII")
@@ -595,12 +581,9 @@ object MultimodalOps {
     * the unit gate constructs its fixtures and checks round-trip
     * means, while the DuckDB oracle only ever sees the stub path (the
     * corpus carries no media bytes). Any failure yields None — never
-    * throws on an executor.
+    * throws on an executor. Returns (RGB channel mean, thumbnail mean)
+    * from one decode.
     */
-  private[operators] def jpegPixelMean(p: Array[Byte]): Option[Double] =
-    jpegFeatures(p).map(_._1)
-
-  /** (RGB channel mean, thumbnail mean) from one JPEG entropy decode. */
   private[operators] def jpegFeatures(p: Array[Byte]): Option[(Double, Double)] = {
     if (p.length < 4 || (p(0) & 0xff) != 0xff || (p(1) & 0xff) != 0xd8)
       return None

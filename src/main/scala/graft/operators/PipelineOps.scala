@@ -112,11 +112,9 @@ object PipelineOps {
 
   /** The (bucket, split) assignment columns behind [[splitCorpus]] —
     * pure row-local functions of (seed, doc_id) with no state, no
-    * shuffle, and no clock, which is what makes the split twin-able:
-    * DocStream.splitDocs applies the SAME columns to an unbounded
-    * stream and StreamingSpec pins stream ≡ batch (a randomSplit-style
-    * RNG assignment has no streaming twin at all — each micro-batch
-    * would re-deal).
+    * shuffle, and no clock, so a document lands in the same split
+    * whatever frame or partitioning it arrives in (a randomSplit-style
+    * RNG assignment would re-deal on every run).
     */
   def splitAssignment(seed: String): (Column, Column) = {
     val bucket = substring(
@@ -638,21 +636,13 @@ object PipelineOps {
     * decontaminate, same md5 rank as quota_sample).
     */
   def corpusPipeline(spark: SparkSession, dir: String): DataFrame =
-    corpusStagesFrom(Tables.documents(spark, dir))
+    corpusSurvivorsFrom(Tables.documents(spark, dir)).orderBy("doc_id")
 
-  /** The composite's stage logic over an arbitrary (doc_id, source,
-    * lang, text) frame — factored out so the streaming twin's spec can
-    * run the IDENTICAL batch stages over its fixture and assert
-    * batch ≡ stream (StreamingSpec). `corpusPipeline` is exactly this
-    * over the documents table; the plan is unchanged by the factoring.
-    */
-  private[graft] def corpusStagesFrom(docs: DataFrame): DataFrame =
-    corpusSurvivorsFrom(docs).orderBy("doc_id")
-
-  /** [[corpusStagesFrom]] without the output sort — the surviving
-    * (doc_id, source, lang, n_tokens) set, consumed mid-plan by the
-    * end-to-end composite [[trainingData]] (a mid-plan global sort
-    * would add an exchange for nothing).
+  /** [[corpusPipeline]]'s stages over an explicit docs frame, without
+    * the output sort — the surviving (doc_id, source, lang, n_tokens)
+    * set, consumed mid-plan by the end-to-end composite
+    * [[trainingData]] (a mid-plan global sort would add an exchange
+    * for nothing).
     */
   private[graft] def corpusSurvivorsFrom(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -687,7 +677,7 @@ object PipelineOps {
     *   embedding lost its SemDeDup election drop — one anti-join
     *   against EmbeddingOps.semanticDropIds)
     *   → BPE tokenize to token-ID sequences
-    *   (TextOps.bpeTokenIdsOn — trained rules from the pinned
+    *   (TextOps.bpeTokenIdsStage — trained rules from the pinned
     *   bpe_merges stage, ids under the tokenizer's corpus-wide id law)
     *   → sequence packing (bin = the [[PackBudget]]-token window of
     *   the EOS-separated packed stream — [[packedSequences]]' seq_id
@@ -709,61 +699,6 @@ object PipelineOps {
     * corpus-order exchange the permutation itself requires. PlanSpec
     * pins the document scan count.
     */
-  /** The composite's verdict + tokenizer chain over an EXPLICIT docs
-    * frame with STANDING state from `dir` (semantic drop set, merge
-    * rules, id law) — the streaming face's batch twin: quality gate →
-    * exact dedup → decontaminate → quota → semantic anti-join → BPE
-    * token ids → seeded split. Emits (doc_id, source, lang, n_tokens,
-    * token_ids, split); the corpus-order tails (pack bin, shuffle
-    * pos) are shard-write-time quantities over the ACCUMULATED
-    * survivors and deliberately absent — a per-arrival append cannot
-    * know its global position. Spec-pinned against [[trainingData]]'s
-    * projection on the standing corpus and against
-    * DocStream.ingestTrainingData micro-batches on fixtures.
-    */
-  private[graft] def trainingDataOn(spark: SparkSession, dir: String,
-      docs: DataFrame, seed: String = "graft:v1"): DataFrame =
-    trainingDataOnGated(spark, dir, docs, seed, gated = false)
-
-  /** [[trainingDataOn]] with the TRAINED quality classifier gating the
-    * survivors — [[trainingDataFtq]]'s explicit-frame twin: the
-    * standing model (pinned `ftq_model` stage, trained on the corpus
-    * at `dir`) scores the INPUT docs through the relational feature
-    * path and only keep-worthy survivors flow into the tokenizer
-    * tail. StreamingSpec pins DocStream.ingestTrainingDataFtq
-    * micro-batches ≡ this frame doc-for-doc.
-    */
-  private[graft] def trainingDataFtqOn(spark: SparkSession, dir: String,
-      docs: DataFrame, seed: String = "graft:v1"): DataFrame =
-    trainingDataOnGated(spark, dir, docs, seed, gated = true)
-
-  private def trainingDataOnGated(spark: SparkSession, dir: String,
-      docs: DataFrame, seed: String, gated: Boolean): DataFrame = {
-    val surv0 = corpusSurvivorsFrom(docs)
-      .join(graft.operators.EmbeddingOps.semanticDropIds(spark, dir)
-        .select(col("vec_id").as("doc_id")), Seq("doc_id"), "left_anti")
-      .select("doc_id", "source", "lang")
-    val surv1 =
-      if (!gated) surv0
-      else {
-        val (w, theta) = QualityOps.ftqStandingModelCached(spark, dir)
-        surv0.join(
-          QualityOps.ftqBatchScoresOn(docs.select(col("doc_id"), col("text")),
-            w, theta).filter(col("keep")).select("doc_id"),
-          Seq("doc_id"), "left_semi")
-      }
-    val surv = OpCaches.track(surv1)
-    val sdocs = docs.select(col("doc_id"), col("text"))
-      .join(surv.select("doc_id"), Seq("doc_id"), "left_semi")
-    val toks = TextOps.bpeTokenIdsOn(spark, dir, sdocs)
-    val (_, split) = splitAssignment(seed)
-    surv.join(toks, Seq("doc_id"))
-      .withColumn("split", split)
-      .select(col("doc_id"), col("source"), col("lang"), col("n_tokens"),
-        col("token_ids"), col("split"))
-      .orderBy("doc_id")
-  }
-
   def trainingData(spark: SparkSession, dir: String, epoch: Int = 0,
       seed: String = "graft:v1"): DataFrame =
     trainingTail(spark, dir, trainedSurvivors(spark, dir), epoch, seed)

@@ -264,47 +264,31 @@ object QualityOps {
     * RDD would not.
     */
   private def ftqFeatures(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.memoStage(spark, dir, "ftq_fv")(
-      ftqFeaturesRaw(Tables.documents(spark, dir)))
+    DedupOps.memoStage(spark, dir, "ftq_fv") {
+      val refs = FtqRefLexicon
+      val toks = Tables.documents(spark, dir)
+        .filter(col("text").isNotNull)
+        .select(col("doc_id"),
+          posexplode(TextOps.tokens(col("text"))).as(Seq("pos", "tok")))
+      val e = toks.select(col("doc_id"), col("tok"), ftqBucket(col("tok")).as("b"))
+      val lab = e.groupBy("doc_id").agg(
+        count(lit(1)).as("n"),
+        count(when(col("tok").isInCollection(refs), lit(1))).as("hits"))
+      val dense = e.groupBy("doc_id", "b").agg(count(lit(1)).as("cnt"))
+        .groupBy("doc_id")
+        .agg(map_from_entries(collect_list(struct(col("b"), col("cnt")))).as("m"))
+      lab.join(dense, Seq("doc_id"))
+        .select(col("doc_id"),
+          (col("hits") * 4 >= col("n")).cast("int").as("y"),
+          (col("doc_id") % 4 =!= 0).as("istrain"),
+          expr(s"transform(sequence(0, ${FtqBuckets - 1}), " +
+            s"j -> CAST((coalesce(element_at(m, CAST(j AS BIGINT)), 0L) * $FtqScale) " +
+            s"DIV n AS DOUBLE))").as("fv"))
+    }
 
   /** Exposed for [[DedupOps.materializePinnedStages]]. */
   private[operators] def ftqFeatureStage(spark: SparkSession, dir: String): DataFrame =
     ftqFeatures(spark, dir)
-
-  /** [[ftqFeatures]] over an explicit (doc_id, …, text) frame — the
-    * scoring surface the gated composites share: the feature law is a
-    * property of the MODEL, so the same document must get the same
-    * features whether scored inside the corpus or inside any subset
-    * (the bpeTokenIdsOn discipline applied to the classifier).
-    */
-  private def ftqFeaturesOf(docs: DataFrame): DataFrame =
-    OpCaches.localCheckpointTracked(ftqFeaturesRaw(docs))
-
-  /** The feature construction WITHOUT a materialization wrapper —
-    * the pinned-stage path persists it (memoStage), the explicit-frame
-    * path checkpoints it ([[ftqFeaturesOf]]); the law lives once.
-    */
-  private def ftqFeaturesRaw(docs: DataFrame): DataFrame = {
-    val refs = FtqRefLexicon
-    val toks = docs
-      .filter(col("text").isNotNull)
-      .select(col("doc_id"),
-        posexplode(TextOps.tokens(col("text"))).as(Seq("pos", "tok")))
-    val e = toks.select(col("doc_id"), col("tok"), ftqBucket(col("tok")).as("b"))
-    val lab = e.groupBy("doc_id").agg(
-      count(lit(1)).as("n"),
-      count(when(col("tok").isInCollection(refs), lit(1))).as("hits"))
-    val dense = e.groupBy("doc_id", "b").agg(count(lit(1)).as("cnt"))
-      .groupBy("doc_id")
-      .agg(map_from_entries(collect_list(struct(col("b"), col("cnt")))).as("m"))
-    lab.join(dense, Seq("doc_id"))
-      .select(col("doc_id"),
-        (col("hits") * 4 >= col("n")).cast("int").as("y"),
-        (col("doc_id") % 4 =!= 0).as("istrain"),
-        expr(s"transform(sequence(0, ${FtqBuckets - 1}), " +
-          s"j -> CAST((coalesce(element_at(m, CAST(j AS BIGINT)), 0L) * $FtqScale) " +
-          s"DIV n AS DOUBLE))").as("fv"))
-  }
 
   /** Integer-quantized linear score under a literal weight vector:
     * floor of the index-order dot product (the fused fold both
@@ -464,8 +448,7 @@ object QualityOps {
     * Scale shape: the corpus never leaves the executors — per step
     * the driver sees a FtqBuckets-row aggregate (model-sized, like
     * the Lloyd and BPE trainers); scoring is one broadcast-literal
-    * projection, so the trained model applies row-locally (the
-    * streaming face scores arrivals with the same literal fold).
+    * projection, so the trained model applies row-locally.
     */
   def ftqClassifier(spark: SparkSession, dir: String): DataFrame = {
     val fv = ftqFeatures(spark, dir)
@@ -505,16 +488,6 @@ object QualityOps {
       .orderBy("split")
   }
 
-  /** The trained model as collected standing state for the streaming
-    * face: (weights, theta) — FtqBuckets doubles + one long, the
-    * broadcast-once story at any corpus size.
-    */
-  private[graft] def ftqStandingModel(spark: SparkSession,
-      dir: String): (Seq[Double], Long) = {
-    val (_, _, w, theta) = ftqTrain(ftqFeatures(spark, dir))
-    (w, theta)
-  }
-
   /** The trained model as a pinned MEMO STAGE (one model-sized frame:
     * FtqBuckets (j, w) rows carrying theta) — the deployment shape:
     * training runs once per retrain (Bench prices the driver loop
@@ -535,8 +508,9 @@ object QualityOps {
         .toDF("j", "w0", "w", "theta0", "theta")
     }
 
-  /** [[ftqStandingModel]] through the pinned [[ftqModelStage]] —
-    * collects the cached 64-row frame (KBs) instead of retraining.
+  /** The trained model as (weights, theta) through the pinned
+    * [[ftqModelStage]] — collects the cached 64-row frame (KBs)
+    * instead of retraining.
     */
   private[graft] def ftqStandingModelCached(spark: SparkSession,
       dir: String): (Seq[Double], Long) = {
@@ -546,70 +520,15 @@ object QualityOps {
 
   /** Batch scoring of the standing corpus under a collected model,
     * through the RELATIONAL feature path (the training-side
-    * construction) — the reference frame StreamingSpec pins the
-    * row-local streaming scorer against, so the two feature
-    * constructions (explode/aggregate vs per-row HOF) cannot drift.
+    * construction).
     */
   private[graft] def ftqBatchScores(spark: SparkSession, dir: String,
       w: Seq[Double], theta: Long): DataFrame =
-    // the standing-corpus path scores the pinned `ftq_fv` stage (one
-    // projection over cached rows) instead of re-deriving the corpus
-    // features; the explicit-frame twin below keeps the from-text path
+    // scores the pinned `ftq_fv` stage (one projection over cached
+    // rows) instead of re-deriving the corpus features
     ftqFeatures(spark, dir)
       .select(col("doc_id"), ftqScore(w).as("score"),
         (ftqScore(w) >= theta).as("keep"))
-
-  /** [[ftqBatchScores]] over an explicit (doc_id, …, text) frame —
-    * consumed by the gated composite's explicit-frame twin
-    * (PipelineOps.trainingDataFtqOn), so the streaming face has a
-    * batch law to be pinned against on arbitrary fixtures.
-    */
-  private[graft] def ftqBatchScoresOn(docs: DataFrame,
-      w: Seq[Double], theta: Long): DataFrame =
-    ftqFeaturesOf(docs)
-      .select(col("doc_id"), ftqScore(w).as("score"),
-        (ftqScore(w) >= theta).as("keep"))
-
-  /** ROW-LOCAL scoring of an explicit (doc_id, …, text) frame under a
-    * collected model — the streaming twin: the same bucket law,
-    * integer-ratio features, literal-weight fold, and threshold,
-    * with no shuffle and no state, so arriving docs score per-row
-    * (StreamingSpec pins stream == batch). Emits the input's columns
-    * plus (score, keep), so a streaming composite can gate rows and
-    * keep flowing their payload (the bpeTokenIdsRowLocal shape);
-    * docs whose text is NULL or token-less drop (the batch feature
-    * path's inner-join semantics).
-    */
-  private[graft] def ftqScoreRowLocal(docs: DataFrame, w: Seq[Double],
-      theta: Long): DataFrame = {
-    val toks = TextOps.tokens(col("text"))
-    val n = size(toks)
-    // bucket each token ONCE (one md5 per token), then count per
-    // bucket over the small long array — the old shape filtered the
-    // token array once per bucket with the md5 inside the lambda,
-    // i.e. O(buckets × n_tokens) hash calls per row, 64× the batch
-    // path's work. The count is cast to BIGINT before scaling so the
-    // row-local expression replays the batch LONG chain exactly
-    // (ftqFeatures: count * FtqScale DIV n — INT arithmetic here
-    // would overflow first for a pathological single-bucket doc).
-    val bk = expr(s"transform(__toks, x -> " +
-      s"CAST(conv(substring(md5(x), 1, 8), 16, 10) AS BIGINT) % $FtqBuckets)")
-    val fv = expr(s"transform(sequence(0, ${FtqBuckets - 1}), j -> " +
-      s"CAST(CAST(size(filter(__bk, b -> b = j)) AS BIGINT) " +
-      s"* $FtqScale DIV size(__bk) AS DOUBLE))")
-    val keep = docs.columns.map(col).toSeq
-    docs
-      .filter(col("text").isNotNull)
-      .withColumn("__toks", toks)
-      .filter(n > 0)
-      .withColumn("__bk", bk)
-      .withColumn("__fv", fv)
-      .select(keep ++ Seq(
-        floor(graft.functions.VectorExprs.dotProduct(typedLit(w), col("__fv")))
-          .cast("long").as("score"),
-        (floor(graft.functions.VectorExprs.dotProduct(typedLit(w), col("__fv")))
-          .cast("long") >= theta).as("keep")): _*)
-  }
 
   /** Hash width of the DSIR importance model (unigram+bigram md5
     * buckets) — coarse on purpose: DSIR's result is that hashed
@@ -721,94 +640,5 @@ object QualityOps {
       .select(col("doc_id"), col("lang"), col("n_grams"), col("w_scaled"),
         col("rk"), expr("rk <= ((__n + 3) div 4)").as("selected"))
       .orderBy("doc_id")
-  }
-
-  /** The trained DSIR model as collected standing state for the
-    * streaming face: the dense per-cell score array (every bucket
-    * 0..B−1 — cells the standing corpus never hit carry the smoothing
-    * law's default floor((Ns+B)/(Nt+B)·scale), so an arrival gram
-    * hashing to a fresh cell scores under the SAME law, not NULL)
-    * plus the frozen selection threshold — the weight of the last
-    * batch-selected document, i.e. the CCNet precomputed-split-point
-    * dial made concrete: arrivals keep when w ≥ θ. B longs + one
-    * long — broadcast-once state at any corpus size.
-    */
-  private[graft] def dsirStandingModel(spark: SparkSession,
-      dir: String): (IndexedSeq[Long], Long) = {
-    val B = DsirBuckets
-    val sel = dsirSelect(spark, dir)
-    val theta = sel.filter(col("selected"))
-      .agg(min("w_scaled")).collect()(0).getLong(0)
-    // rebuild the B-row score table exactly as the batch query does —
-    // one tiny aggregate chain, collected
-    val docs = Tables.documents(spark, dir)
-    val toks = TextOps.tokens(col("text"))
-    val bigrams = when(size(col("__toks")) >= 2,
-      transform(sequence(lit(1), size(col("__toks")) - 1),
-        i => concat_ws(" ",
-          element_at(col("__toks"), i), element_at(col("__toks"), i + 1))))
-      .otherwise(array().cast("array<string>"))
-    val mdl = docs
-      .withColumn("__toks", toks)
-      .select((col("lang") === "en").as("tgt"),
-        explode(concat(col("__toks"), bigrams)).as("g"))
-      .groupBy((conv(substring(md5(col("g")), 1, 8), 16, 10).cast("long") % B)
-        .as("b"))
-      .agg(count(lit(1)).as("cs"),
-        count(when(col("tgt"), lit(1))).as("ct"))
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val ns = mdl.values.map(_._1).sum
-    val nt = mdl.values.map(_._2).sum
-    val ps = (0 until B).map { b =>
-      val (cs, ct) = mdl.getOrElse(b.toLong, (0L, 0L))
-      math.floor(
-        (ct + 1).toDouble * (ns + B).toDouble /
-          ((cs + 1).toDouble * (nt + B).toDouble) * DsirScale).toLong
-    }
-    (ps, theta)
-  }
-
-  /** ROW-LOCAL DSIR scoring of an explicit (doc_id, …, text) frame
-    * under a collected model — the streaming twin: the same gram
-    * construction, md5 cell law, per-cell score lookup, and
-    * decimal-sum integer-mean, with no shuffle and no state, so
-    * arriving documents score per-row and keep when w ≥ θ
-    * (StreamingSpec pins stream ≡ the batch weights doc-for-doc).
-    * Emits the input's columns plus (n_grams, w_scaled, keep);
-    * NULL-text / gram-less docs emit n_grams=0, w=0 — the batch
-    * query's left-join convention, so the pin covers every doc.
-    */
-  private[graft] def dsirScoreRowLocal(docs: DataFrame,
-      ps: IndexedSeq[Long], theta: Long): DataFrame = {
-    val B = DsirBuckets
-    val toks = TextOps.tokens(col("text"))
-    val bigrams = when(size(col("__toks")) >= 2,
-      transform(sequence(lit(1), size(col("__toks")) - 1),
-        i => concat_ws(" ",
-          element_at(col("__toks"), i), element_at(col("__toks"), i + 1))))
-      .otherwise(array().cast("array<string>"))
-    // bucket each gram ONCE (one md5 per gram — the ftqScoreRowLocal
-    // lesson), then fold the per-cell scores through a DECIMAL
-    // accumulator so the sum replays the batch decimal(38,0) chain
-    val bk = transform(col("__grams"),
-      g => (conv(substring(md5(g), 1, 8), 16, 10).cast("long") % B)
-        .cast("int"))
-    val psLit = typedLit(ps)
-    val sSum = aggregate(col("__bk"),
-      lit(0).cast("decimal(38,0)"),
-      (acc, b) => acc + element_at(psLit, b + 1))
-    val keep = docs.columns.map(col).toSeq
-    docs
-      .withColumn("__toks", toks)
-      .withColumn("__grams", concat(col("__toks"), bigrams))
-      .withColumn("__bk", bk)
-      .withColumn("__n", coalesce(size(col("__bk")), lit(0)).cast("long"))
-      .withColumn("__s", sSum)
-      .withColumn("__w",
-        when(col("__n") > 0, expr("__s div __n")).otherwise(lit(0L)))
-      .select(keep ++ Seq(
-        col("__n").as("n_grams"),
-        col("__w").as("w_scaled"),
-        (col("__w") >= theta).as("keep")): _*)
   }
 }

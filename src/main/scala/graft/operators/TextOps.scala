@@ -284,9 +284,16 @@ object TextOps {
     * docs emit zeros (textTokens' established contract).
     */
   def bpeEncode(spark: SparkSession, dir: String,
-      rounds: Int = BpeMergeRounds): DataFrame = {
-    val merges = bpeLearnedMerges(spark, dir, rounds)
-    val words = Tables.documents(spark, dir)
+      rounds: Int = BpeMergeRounds): DataFrame =
+    bpeEncodeOn(Tables.documents(spark, dir), bpeLearnedMerges(spark, dir, rounds))
+      .orderBy("doc_id")
+
+  /** [[bpeEncode]] over an explicit (doc_id, text) frame and merge
+    * list, without the output sort.
+    */
+  private[operators] def bpeEncodeOn(docs: DataFrame,
+      merges: Seq[(String, String)]): DataFrame = {
+    val words = docs
       .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
     val agg = words
       .join(bpeVocabEncoded(words, merges), Seq("tok"))
@@ -295,13 +302,12 @@ object TextOps {
         sum((length(col("tok")) + 1).cast("long")).as("_s0"),
         sum(size(col("syms")).cast("long")).as("_nt"))
     val hasText = col("text").isNotNull
-    Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+    docs.select(col("doc_id"), col("text"))
       .join(agg, Seq("doc_id"), "left")
       .select(col("doc_id"),
         when(hasText, coalesce(col("_w"), lit(0L))).as("n_words"),
         when(hasText, coalesce(col("_s0"), lit(0L))).as("n_syms0"),
         when(hasText, coalesce(col("_nt"), lit(0L))).as("n_tokens"))
-      .orderBy("doc_id")
   }
 
   /** The vocabulary cache: each DISTINCT word of `words` (column
@@ -333,15 +339,15 @@ object TextOps {
     * budget only): training is index-build work a deployment pays once
     * per retrain — Bench prices it inside `_substrate` exactly like
     * the PQ codebooks (`pq_cbt`), and every encoding consumer
-    * (`bpenc`, the token-id emitter, the composite, the streaming
-    * encoder) reads the learned rules without replaying the
-    * 8-round driver loop inside its own timed query.
+    * (`bpenc`, the token-id emitter, the composite) reads the learned
+    * rules without replaying the 8-round driver loop inside its own
+    * timed query.
     */
   private[operators] def bpeMergeTable(spark: SparkSession, dir: String): DataFrame =
     DedupOps.memoStage(spark, dir, "bpe_merges")(bpeTrain(spark, dir))
 
   /** The learned merge table collected driver-side — the tiny
-    * (≤ rounds rows) state the row-local encoder closes over; a
+    * (≤ rounds rows) state the vocabulary encoder closes over; a
     * production deployment persists this once per training run and
     * ships it with the job. The default merge budget reads the pinned
     * [[bpeMergeTable]] stage; a non-default budget (spec fixtures)
@@ -396,9 +402,7 @@ object TextOps {
     * directly (same merge rules, same id law, same per-word chain).
     */
   private[operators] def bpeTokenIdsStage(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.memoStage(spark, dir, "tok_ids")(
-      bpeTokenIdsOn(spark, dir,
-        Tables.documents(spark, dir).select(col("doc_id"), col("text"))))
+    DedupOps.memoStage(spark, dir, "tok_ids")(bpeTokenIdsEncode(spark, dir))
 
   /** Tokenizer FERTILITY report — the standard tokenizer-quality
     * metric (how many characters one token buys, per language): per
@@ -533,8 +537,8 @@ object TextOps {
   /** The (sym, id) vocabulary id map under the tokenizer id law —
     * alphabet symbols take 0..A−1 in binary-lexicographic order,
     * merge rank r takes A+r−1, MIN id per symbol string. Shared by
-    * the batch encoder and the streaming face's collected standing
-    * map so the law lives once.
+    * the token-id encoder, the vocabulary-usage report and the
+    * decoder so the law lives once.
     */
   private[operators] def bpeIdMapFrame(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -552,56 +556,8 @@ object TextOps {
       .groupBy("sym").agg(min("id").as("id"))
   }
 
-  /** The id map as collected standing state for the streaming
-    * tokenizer — vocabulary-sized (alphabet + one entry per merge,
-    * KBs), the broadcast-once-per-retrain story at any corpus size.
-    */
-  private[graft] def bpeStandingIdMap(spark: SparkSession, dir: String): Map[String, Long] =
-    bpeIdMapFrame(spark, dir).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-
-  /** TOKEN-ID sequences as a fully ROW-LOCAL projection over an
-    * explicit (doc_id, …, text) frame under COLLECTED standing state
-    * (merge rules + id map) — the streaming twin of
-    * [[bpeTokenIdsOn]]: per word the same padded replace chain as
-    * [[bpeEncodeRowLocal]], symbols flattened in (word, symbol)
-    * order, ids looked up in the literal map — no explode, no
-    * shuffle, no state, so arriving documents tokenize per-row
-    * (StreamingSpec pins stream ≡ the batch encoder doc-for-doc).
-    * Emits the input's columns minus text, plus (n_tokens,
-    * token_ids) in the batch encoder's format.
-    */
-  private[graft] def bpeTokenIdsRowLocal(docs: DataFrame,
-      merges: Seq[(String, String)], idMap: Map[String, Long]): DataFrame = {
-    def wordSyms(tok: Column): Column = {
-      val chars = transform(sequence(lit(1), length(tok)),
-        i => tok.substr(i, lit(1)))
-      var w: Column = concat(lit(" "), array_join(chars, "  "),
-        lit("  " + BpeEndMark + " "))
-      merges.foreach { case (a, b) =>
-        w = replace(w, lit(s" $a  $b "), lit(s" ${a}$b "))
-      }
-      split(trim(w), "  ")
-    }
-    val syms = flatten(transform(tokens(col("text")), t => wordSyms(t)))
-    // drop out-of-vocabulary symbols (characters absent from the
-    // standing alphabet map to NULL under element_at with ANSI off) —
-    // matching the batch encoder, whose inner idMap join drops them
-    // from both the count and the list; without this filter size(ids)
-    // counted the NULL while array_join silently skipped it, so an
-    // OOV arrival emitted n_tokens > the actual id count
-    val ids = filter(
-      transform(syms, s2 => element_at(typedLit(idMap), s2)),
-      i => i.isNotNull)
-    val keep = docs.columns.filterNot(_ == "text").map(col).toSeq
-    docs.select(keep ++ Seq(
-      size(ids).cast("long").as("n_tokens"),
-      array_join(transform(ids, i => i.cast("string")), ",").as("token_ids")): _*)
-  }
-
-  private[operators] def bpeTokenIdsOn(spark: SparkSession, dir: String,
-      docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  private def bpeTokenIdsEncode(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     val merges = bpeLearnedMerges(spark, dir)
     // checkpointed skinny word instances: the vocabulary distinct and
     // the encode join BOTH read them — without cutting the lineage
@@ -679,37 +635,6 @@ object TextOps {
     bpeAlphabet(spark, dir)
       .agg((count(lit(1)) + lit(BpeMergeRounds.toLong)).as("__eos"))
 
-  /** [[bpeEncode]] as a fully ROW-LOCAL projection over an explicit
-    * (doc_id, text) frame — no explode, no shuffle, no state: the
-    * per-word merge chain runs inside array HOF lambdas, so the same
-    * columns apply verbatim to a STREAMING frame (DocStream.encodeDocs
-    * is exactly this over arriving docs — the tokenizer pass of a
-    * continuous ingest). The batch [[bpeEncode]] keeps the codegen'd
-    * explode + hash-aggregate form (HOF lambdas run interpreted);
-    * OperatorSpec pins the two forms row-for-row equal, and
-    * StreamingSpec pins the stream against batch.
-    */
-  def bpeEncodeRowLocal(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
-    def wordTokens(tok: Column): Column = {
-      val chars = transform(sequence(lit(1), length(tok)),
-        i => tok.substr(i, lit(1)))
-      var w: Column = concat(lit(" "), array_join(chars, "  "),
-        lit("  " + BpeEndMark + " "))
-      merges.foreach { case (a, b) =>
-        w = replace(w, lit(s" $a  $b "), lit(s" ${a}$b "))
-      }
-      size(split(trim(w), "  ")).cast("long")
-    }
-    val toks = tokens(col("text"))
-    val hasText = col("text").isNotNull
-    docs.select(col("doc_id"),
-      when(hasText, size(toks).cast("long")).as("n_words"),
-      when(hasText, aggregate(toks, lit(0L),
-        (acc, t) => acc + length(t) + 1)).as("n_syms0"),
-      when(hasText, aggregate(toks, lit(0L),
-        (acc, t) => acc + wordTokens(t))).as("n_tokens"))
-  }
-
   /** Content fingerprint: hash of the normalized text — the key for
     * exact dedup at any scale (group-by on the hash is one shuffle of
     * (hash, id) pairs, never of full documents).
@@ -780,11 +705,10 @@ object TextOps {
   /** The selection over an explicit (doc_id, text, …) frame — the
     * codegen'd window/explode form restricted to whatever docs the
     * caller passes (the incremental re-cut runs it over the TOUCHED
-    * docs only; the interpreted row-local twin is for per-row
-    * streaming arrivals, whose HOF lambdas re-evaluate the key array
-    * per window and go quadratic on long batch documents).
+    * docs only). A per-row array-HOF form would re-evaluate the key
+    * array per window and go quadratic on long documents.
     */
-  private def winnowSelectionOn(docs: DataFrame): DataFrame = {
+  private[operators] def winnowSelectionOn(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val (k, w) = (WinnowK, WinnowW)
     val toks = docs
@@ -868,12 +792,11 @@ object TextOps {
 
   /** The df-capped (fp, doc_id) kept selection — the attribution
     * index every winnowing consumer joins (the full self-join `wsim`,
-    * the incremental probe `winc`, the matched-extent report, the
-    * streaming face). df via a window over the SAME fp partitioning
-    * the pair join needs — the filter composes with the join's
-    * clustering instead of adding a second fp shuffle (a broadcast of
-    * the df frame would be wrong at scale: distinct fingerprints grow
-    * with the corpus). A pinned MEMO STAGE (`win_kept`, priced in
+    * the incremental probe `winc`, the matched-extent report). df via
+    * a window over the SAME fp partitioning the pair join needs — the
+    * filter composes with the join's clustering instead of adding a
+    * second fp shuffle (a broadcast of the df frame would be wrong at
+    * scale: distinct fingerprints grow with the corpus). A pinned MEMO STAGE (`win_kept`, priced in
     * `_substrate`): this is the standing attribution index a
     * deployment keeps ON DISK between refreshes — the full self-join
     * (`wsim`), the incremental probes (`winc`, `wci`), and the
@@ -967,8 +890,8 @@ object TextOps {
 
   /** [[winnowExtents]]' core over an explicit kept selection
     * (doc_id, fpos, fp) and flagged pair frame — the spec surface for
-    * the guarantee-corollary fixture (planted shared runs through the
-    * row-local selection).
+    * the guarantee-corollary fixture (planted shared runs through
+    * [[winnowSelectionOn]]).
     */
   private[graft] def winnowExtentsFrom(sel: DataFrame, pairs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1144,70 +1067,6 @@ object TextOps {
         (col("n_tokens") - coalesce(col("n_kept"), lit(0L))).as("n_cut"),
         coalesce(col("cleaned_text"), lit("")).as("cleaned_text"))
       .orderBy("doc_id")
-  }
-
-  /** [[winnowFingerprints]] as a fully ROW-LOCAL projection over an
-    * explicit (doc_id, text) frame — winnowing is per-document by
-    * construction (every window lives inside one doc), so the k-gram
-    * hashes, the sliding minima, and the distinct selection all
-    * compute as array HOFs with no shuffle and no state: the streaming
-    * twin's column form (DocStream.fingerprintDocs). Same packed
-    * `hash·2²⁰+pos` law as the batch operator, so selections are
-    * bit-identical; the batch form keeps the codegen'd window shape
-    * (HOF lambdas run interpreted). Docs without a full window emit
-    * no rows.
-    */
-  def winnowRowLocal(docs: DataFrame): DataFrame = {
-    val (k, w) = (WinnowK, WinnowW)
-    val toks = tokens(col("text"))
-    def keyAt(i: Column): Column =
-      conv(substring(md5(concat_ws(" ", slice(toks, i + 1, lit(k)))), 1, 10),
-        16, 10).cast("long") * lit(1048576L) + i.cast("long")
-    val keys = transform(sequence(lit(0), size(toks) - k), i => keyAt(i))
-    val sel = when(size(toks) - k + 1 >= w, array_distinct(
-      transform(sequence(lit(0), size(toks) - k - w + 1),
-        t => array_min(slice(keys, t + 1, lit(w))))))
-    docs
-      // same 20-bit position guard as the batch operator: the largest
-      // gram position is size(toks) − k, checked once per row
-      .withColumn("__ck", assert_true(
-        coalesce(size(toks) - k, lit(0)) < lit(1048576),
-        lit("winnowing position >= 2^20: packed key would overflow — " +
-          "chunk the document or widen the position field")))
-      .filter(col("__ck").isNull)
-      .select(col("doc_id"), explode(sel).as("wm"))
-      .select(col("doc_id"),
-        col("wm").bitwiseAND(lit(1048575L)).as("fpos"),
-        shiftright(col("wm"), 20).as("fp"))
-  }
-
-  /** Each document's DISTINCT selected fingerprint set as ONE
-    * row-local array column — [[winnowRowLocal]]'s selection with the
-    * positions dropped and the hashes deduped in-row: the probe shape
-    * the streaming attribution face ships per arriving document
-    * (DocStream.attributeDocs). Docs without a full window emit an
-    * empty array.
-    */
-  private[graft] def winnowFpSet(docs: DataFrame): DataFrame = {
-    val (k, w) = (WinnowK, WinnowW)
-    val toks = tokens(col("text"))
-    def keyAt(i: Column): Column =
-      conv(substring(md5(concat_ws(" ", slice(toks, i + 1, lit(k)))), 1, 10),
-        16, 10).cast("long") * lit(1048576L) + i.cast("long")
-    val keys = transform(sequence(lit(0), size(toks) - k), i => keyAt(i))
-    val sel = when(size(toks) - k + 1 >= w, array_distinct(
-      transform(
-        array_distinct(transform(sequence(lit(0), size(toks) - k - w + 1),
-          t => array_min(slice(keys, t + 1, lit(w))))),
-        wm => shiftright(wm, 20))))
-      .otherwise(array().cast("array<bigint>"))
-    docs
-      .withColumn("__ck", assert_true(
-        coalesce(size(toks) - k, lit(0)) < lit(1048576),
-        lit("winnowing position >= 2^20: packed key would overflow — " +
-          "chunk the document or widen the position field")))
-      .filter(col("__ck").isNull)
-      .select(col("doc_id"), sel.as("fps"))
   }
 
   /** Repetition quality signals (the Gopher-rules family — Rae et al.

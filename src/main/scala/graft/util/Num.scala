@@ -19,8 +19,4 @@ object Num {
   /** Exact SUM of a 2-decimal-place monetary double, as double. */
   def moneySum(c: Column): Column =
     sum(c.cast(DecimalType(18, 2))).cast("double")
-
-  /** Exact mean of a 2dp monetary double: exact decimal sum / count. */
-  def moneyAvg(c: Column): Column =
-    (sum(c.cast(DecimalType(18, 2))).cast("double") / count(lit(1)))
 }

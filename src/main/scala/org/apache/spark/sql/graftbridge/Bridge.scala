@@ -8,18 +8,13 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * expose custom Catalyst expressions as user-facing Columns — the
   * standard extension-library technique (a sub-package of
   * org.apache.spark.sql sees `private[sql]` members). Nothing here
-  * does work; it only re-exports two converters and the function
-  * registry hook.
+  * does work; it only re-exports the converters and registry hooks
+  * below.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
 
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  def registerFunction(spark: SparkSession, name: String,
-                       builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
 
   /** Nullability-insensitive type equality (DataType.sameType is
     * private[sql] in Spark 4) — the comparison Spark's own join

@@ -31,7 +31,6 @@ class VectorExprsSpec extends AnyFunSuite {
   }
 
   test("registered SQL function works and agrees") {
-    VectorExprs.register(spark)
     graft.sources.Tables.embeddings(spark, sf).createOrReplaceTempView("emb")
     val r = spark.sql(
       """SELECT cosine_sim(

@@ -239,83 +239,6 @@ class OperatorSpec extends AnyFunSuite {
     assert(rows.map(_.getLong(4)).sum <= 1000000L)
   }
 
-  test("bpeEncodeRowLocal ≡ bpeEncode — the streaming twin's column form") {
-    // the row-local HOF form must agree with the codegen'd
-    // explode+aggregate form on every doc, NULL/zero contract included
-    def keyed(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getLong(0) -> (1 to 3).map(i =>
-        if (r.isNullAt(i)) null else r.getLong(i))).toMap
-    val batch = keyed(TextOps.bpeEncode(spark, sf))
-    val rowLocal = keyed(TextOps.bpeEncodeRowLocal(
-      graft.sources.Tables.documents(spark, sf).select("doc_id", "text"),
-      TextOps.bpeLearnedMerges(spark, sf)))
-    assert(rowLocal === batch)
-  }
-
-  test("refresh with genuinely NEW docs: fresh scores admit, standing reads, ≡ from-scratch") {
-    // the common production case the gated fixture cannot reach (its
-    // delta is a corpus subset): arriving docs ABSENT from standing
-    // state. Pins (a) their quality is taken from the fresh input,
-    // (b) base docs' rows read standing state verbatim, (c) the merged
-    // verdict table equals the from-scratch chain over the union
-    // corpus — including a pairless new doc admitted as a singleton.
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    def q(docs: org.apache.spark.sql.DataFrame) =
-      TextOps.textQualityOn(docs).select(col("doc_id"), col("quality_score"))
-    val baseDocs = Seq(
-      (1L, "the cat sat on the mat and looked at the dog for a while"),
-      (2L, "the cat sat on the mat and looked at the dog for hours"),
-      (3L, "completely unrelated text about spark physical plans"),
-      (4L, "another unrelated document about window functions"))
-      .toDF("doc_id", "text")
-    val newDocs = Seq(
-      (10L, "the cat sat on the mat and looked at the dog for a bit"),
-      (11L, "a brand new pairless document that just arrived today"))
-      .toDF("doc_id", "text")
-    val basePairs = Seq((1L, 2L)).toDF("doc_a", "doc_b")
-    val deltaPairs = Seq((2L, 10L)).toDF("doc_a", "doc_b")
-    val emptyLabels = Seq.empty[(Long, Long)].toDF("id", "lbl")
-    val standingLabels = DedupOps.contractedMapping(emptyLabels, basePairs)
-    val standingKeep = DedupOps.keepVerdicts(
-      standingLabels.select(col("id").as("doc_id"), col("lbl").as("cluster")),
-      q(baseDocs))
-      .select("doc_id", "cluster", "quality_score", "keep", "kept_doc", "n_members")
-    val (mergedLabels, mergedKeep) = DedupOps.mergeRefreshIntoStanding(
-      standingLabels, standingKeep, deltaPairs, q(newDocs))
-    def keyed(df: org.apache.spark.sql.DataFrame) = df.collect().map { r =>
-      r.getAs[Long]("doc_id") -> ((r.getAs[Long]("cluster"),
-        r.getAs[Double]("quality_score"), r.getAs[Boolean]("keep"),
-        r.getAs[Long]("kept_doc"), r.getAs[Long]("n_members")))
-    }.toMap
-    val merged = keyed(mergedKeep)
-    val lbl = mergedLabels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // standing collected BEFORE releaseTransients: the standing frame
-    // is lazy over the checkpointed labels — reading it after the
-    // release would recompute through freed checkpoint blocks
-    val standing = keyed(standingKeep)
-    // (c) ≡ from-scratch over the union corpus: components of
-    // basePairs ∪ deltaPairs are {1,2,10} (hand-derived — an
-    // independent reference, not the machinery under test re-run)
-    val fullClusters = Seq((1L, 1L), (2L, 1L), (10L, 1L)).toDF("doc_id", "cluster")
-    val scratch = keyed(DedupOps.keepVerdicts(fullClusters,
-      q(baseDocs.unionByName(newDocs)))
-      .select("doc_id", "cluster", "quality_score", "keep", "kept_doc", "n_members"))
-    val freshScores = q(newDocs).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    DedupOps.releaseTransients(spark)
-    assert(merged === scratch, "merged refresh diverged from the from-scratch chain")
-    assert(merged(10L)._2 === freshScores(10L))
-    assert(merged(11L)._2 === freshScores(11L))
-    // (a') the pairless arrival is a keep=true singleton
-    assert(merged(11L) === ((11L, freshScores(11L), true, 11L, 1L)))
-    // (b) untouched base rows carried verbatim from standing state
-    Seq(3L, 4L).foreach(id => assert(merged(id) === standing(id),
-      s"untouched doc $id's row was not carried from standing state"))
-    // and the merged labels cover the bridged component under one min-id
-    assert(Seq(1L, 2L, 10L).map(lbl) === Seq(1L, 1L, 1L))
-  }
-
   test("winnowOverlapDelta ≡ full attribution restricted to delta-touching pairs") {
     // probe-vs-index must find EXACTLY the self-join's delta-touching
     // pairs with identical shared counts — the incremental-refresh
@@ -338,7 +261,6 @@ class OperatorSpec extends AnyFunSuite {
     // identical fingerprints at aligned offsets with gaps ≤ w, so a
     // region of ≥ 2(w+k−1) tokens must produce ≥2 shared selections
     // that the gaps-and-islands pass joins into ONE extent
-    import org.apache.spark.sql.functions.col
     import spark.implicits._
     val (k, w) = (TextOps.WinnowK, TextOps.WinnowW)
     val L = 2 * (w + k - 1)
@@ -346,8 +268,7 @@ class OperatorSpec extends AnyFunSuite {
     val docs = Seq(
       (1L, s"alpha beta gamma delta epsilon zeta $shared tail1 tail2 tail3"),
       (2L, s"one two $shared other words entirely here now")).toDF("doc_id", "text")
-    val sel = TextOps.winnowRowLocal(docs)
-      .select(col("doc_id"), col("fpos"), col("fp"))
+    val sel = TextOps.winnowSelectionOn(docs)
     val pairs = Seq((1L, 2L)).toDF("doc_a", "doc_b")
     val ext = TextOps.winnowExtentsFrom(sel, pairs).collect()
     assert(ext.nonEmpty, "no extent from a guarantee-length shared run")
@@ -431,9 +352,8 @@ class OperatorSpec extends AnyFunSuite {
 
   test("winnowing edges: below-threshold docs emit nothing, one-window docs emit one") {
     import spark.implicits._
-    // the row-local twin shares the batch law (pinned elsewhere), so
-    // edge semantics checked here hold for both forms: fewer than k
-    // tokens → no grams; fewer than w grams → no full window → no
+    // the batch selection over explicit docs: fewer than k tokens →
+    // no grams; fewer than w grams → no full window → no
     // fingerprints; exactly w grams → exactly one window → exactly
     // one selection; NULL text → no rows
     val docs = Seq(
@@ -442,7 +362,7 @@ class OperatorSpec extends AnyFunSuite {
       (3L, "a b c d e f"),        // 4 grams = w: one window
       (4L, null.asInstanceOf[String]))
       .toDF("doc_id", "text")
-    val out = TextOps.winnowRowLocal(docs).collect()
+    val out = TextOps.winnowSelectionOn(docs).collect()
       .groupBy(_.getLong(0))
     assert(!out.contains(1L) && !out.contains(2L) && !out.contains(4L),
       s"sub-threshold docs emitted fingerprints: ${out.keySet}")
@@ -464,7 +384,7 @@ class OperatorSpec extends AnyFunSuite {
     val merges = TextOps.bpeTrainOn(wc, TextOps.BpeMergeRounds).collect()
       .map(r => (r.getAs[String]("sym_a"), r.getAs[String]("sym_b"))).toSeq
     val doc = Seq((1L, "aaa abab ab")).toDF("doc_id", "text")
-    val row = TextOps.bpeEncodeRowLocal(doc, merges).collect().head
+    val row = TextOps.bpeEncodeOn(doc, merges).collect().head
     assert((row.getLong(1), row.getLong(2), row.getLong(3)) === ((3L, 12L, 3L)),
       s"planted-vocab encode diverged: $row")
   }
@@ -1323,7 +1243,8 @@ class OperatorSpec extends AnyFunSuite {
     }
     // decode is only well-defined if the id law is injective — two
     // symbols sharing an id would make the round trip ambiguous
-    val idMap = TextOps.bpeStandingIdMap(spark, sf)
+    val idMap = TextOps.bpeIdMapFrame(spark, sf).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(idMap.nonEmpty && idMap.values.toSet.size === idMap.size,
       "id map is not injective — decode would be ambiguous")
   }
@@ -1370,37 +1291,6 @@ class OperatorSpec extends AnyFunSuite {
     val enSel = sel.count(_.getString(1) == "en").toDouble / sel.length
     assert(enSel > enAll,
       s"selection not target-enriched: en $enSel among selected vs $enAll overall")
-  }
-
-  test("row-local token-id encode handles OOV symbols exactly like the batch inner join") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    // 'ø' is absent from the standing corpus' alphabet, so the batch
-    // encoder's inner idMap join drops that symbol from BOTH the count
-    // and the list; the row-local twin maps it to NULL via element_at
-    // and must filter it — before the fix, size(ids) counted the NULL
-    // while array_join skipped it, so n_tokens > |token_ids| on any
-    // OOV arrival (ADVICE r18)
-    val docs = Seq(
-      (900001L, "the fast key møøp order sort table scan"),
-      (900002L, "merge query group vector hash"))
-      .toDF("doc_id", "text")
-    val merges = TextOps.bpeLearnedMerges(spark, sf)
-    val idMap = TextOps.bpeStandingIdMap(spark, sf)
-    assert(!idMap.contains("ø"), "fixture char unexpectedly in the alphabet")
-    def keyed(rows: Array[org.apache.spark.sql.Row]) =
-      rows.map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
-    val local = keyed(TextOps.bpeTokenIdsRowLocal(
-      docs.select(col("doc_id"), col("text")), merges, idMap).collect())
-    val batch = keyed(TextOps.bpeTokenIdsOn(spark, sf, docs).collect())
-    DedupOps.releaseTransients(spark)
-    assert(local === batch, s"row-local $local != batch $batch on OOV input")
-    // the count matches the list it ships with — the exact regression
-    local.values.foreach { case (n, ids) =>
-      assert(ids.split(",").filter(_.nonEmpty).length.toLong === n)
-    }
-    // and the OOV doc still emitted its in-vocabulary tokens
-    assert(local(900001L)._1 > 0)
   }
 
   test("pinned-stage consumer declarations stay in sync with the registry") {

@@ -451,23 +451,6 @@ class PipelineOpsSpec extends AnyFunSuite {
       "ftq gate did not bind — spec is vacuous at this sf")
   }
 
-  test("trainingDataOn over the standing corpus equals the composite's projection") {
-    // the streaming face's batch twin must be the SAME law as the
-    // oracle-gated composite — pin frame equality on the shared
-    // columns so the two chains cannot drift
-    val on = PipelineOps.trainingDataOn(spark, sf,
-        graft.sources.Tables.documents(spark, sf)).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2),
-        r.getLong(3), r.getString(4), r.getString(5))).toSeq
-    val composite = PipelineOps.trainingData(spark, sf)
-      .select("doc_id", "source", "lang", "n_tokens", "token_ids", "split")
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2),
-        r.getLong(3), r.getString(4), r.getString(5))).toSeq
-    DedupOps.releaseTransients(spark)
-    assert(on.nonEmpty && on === composite)
-  }
-
   test("winsorizeByGroup: clamps into the band, passes interior values through") {
     val rows = PipelineOps.winsorizeByGroup(spark, sf).collect()
       .map(r => (r.getString(1), r.getDouble(2), r.getDouble(3)))

@@ -107,396 +107,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed === batch)
   }
 
-  test("streaming split twin ≡ batch splitCorpus, row for row") {
-    val docsSchema = spark.read.parquet(s"$sf/documents.parquet").schema
-    val stream = spark.readStream
-      .schema(docsSchema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sf)
-    runToCompletion(DocStream.splitDocs(stream), "split_stream", "append")
-    val streamed = spark.table("split_stream").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3)))
-      .sortBy(_._1).toSeq
-    val batch = graft.operators.PipelineOps.splitCorpus(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3)))
-      .sortBy(_._1).toSeq
-    assert(streamed.nonEmpty && streamed === batch,
-      "stream and batch split assignments diverged")
-    // and a different seed re-deals on the stream exactly as in batch
-    runToCompletion(DocStream.splitDocs(stream, seed = "graft:v2"),
-      "split_stream2", "append")
-    val streamed2 = spark.table("split_stream2").collect()
-      .map(r => r.getLong(0) -> r.getString(3)).toMap
-    val batch2 = graft.operators.PipelineOps.splitCorpus(spark, sf, seed = "graft:v2")
-      .collect().map(r => r.getLong(0) -> r.getString(3)).toMap
-    assert(streamed2 === batch2)
-  }
-
-  test("streaming delta-dedup twin ≡ batch dedupDelta, jaccard doubles included") {
-    // sf0.01: the smallest SF where minhash emits pairs. The arriving
-    // shard (every fifth doc — dedupDelta's demo predicate) streams
-    // against the standing index; pairs AND their exact-Jaccard values
-    // must match the batch probe bitwise (same row-local derivations).
-    val dir = "/root/testdata/sf0.01"
-    val docsSchema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val stream = spark.readStream
-      .schema(docsSchema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-      .filter(col("doc_id") % 5 === 0)
-    runToCompletion(DocStream.deltaNearDups(spark, stream, dir),
-      "delta_stream", "append")
-    val streamed = spark.table("delta_stream").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val batch = graft.operators.DedupOps.dedupDelta(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    graft.operators.DedupOps.releaseTransients(spark)
-    assert(streamed.nonEmpty && streamed === batch,
-      s"stream ${streamed.size} pairs vs batch ${batch.size}")
-  }
-
-  test("streaming label maintenance ≡ batch labelsIncremental after N micro-batches") {
-    // the refresh's streaming face: delta docs arrive over THREE
-    // micro-batches; each batch's near-dup pairs merge into standing
-    // labels via the contracted-graph transaction. The fixpoint is
-    // order-independent (components of base ∪ all pairs, min-id
-    // labels), so the final standing frame must equal the one-shot
-    // batch refresh over the same delta — frame-for-frame.
-    val dir = "/root/testdata/sf0.01"
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val delta = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id") % 5 === 0)
-      .select(col("doc_id"), col("text")).as[(Long, String)].collect()
-    assert(delta.length >= 3, "fixture too small to slice into micro-batches")
-    val src = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val docs = src.toDF().toDF("doc_id", "text")
-    val state = new DocStream.StandingLabels(
-      graft.operators.DedupOps.baseLabels(spark, dir))
-    val q = DocStream.maintainLabels(spark, docs, dir, state)
-    val nBefore = state.frame.count()
-    delta.grouped(delta.length / 3 + 1).foreach { chunk =>
-      src.addData(chunk.toSeq: _*)
-      q.processAllAvailable()
-    }
-    q.stop()
-    val streamed = state.frame.collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val batch = graft.operators.DedupOps.labelsIncremental(spark, dir)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    graft.operators.DedupOps.releaseTransients(spark)
-    assert(streamed === batch,
-      "streamed standing labels diverged from the batch refresh")
-    // and the stream actually merged something (standing state moved)
-    assert(streamed.exists { case (id, lbl) => id != lbl } || nBefore < streamed.size,
-      "fixture produced no label movement")
-  }
-
-  test("streaming BPE encode ≡ batch bpeEncode, row for row") {
-    val docsSchema = spark.read.parquet(s"$sf/documents.parquet").schema
-    val stream = spark.readStream
-      .schema(docsSchema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sf)
-    runToCompletion(DocStream.encodeDocs(spark, stream, sf), "bpenc_stream", "append")
-    def keyed(rows: Array[org.apache.spark.sql.Row]) = rows
-      .map(r => r.getLong(0) -> (1 to 3).map(i =>
-        if (r.isNullAt(i)) null else r.getLong(i))).toMap
-    val streamed = keyed(spark.table("bpenc_stream").collect())
-    val batch = keyed(graft.operators.TextOps.bpeEncode(spark, sf).collect())
-    assert(streamed.nonEmpty && streamed === batch,
-      "streamed BPE encode diverged from batch")
-  }
-
-  test("streaming training-data composite ≡ the one-shot batch chain, doc for doc") {
-    import spark.implicits._
-    // the full maintained-state cascade: quality → watermarked dedup →
-    // decontamination → quota → STANDING semantic drop → row-local BPE
-    // token ids → split, across micro-batches with a cross-batch
-    // duplicate pair and a semantic-drop member. Standing state
-    // (semantic drop set, merge rules, id map) comes from the sf0.001
-    // corpus; fixture text uses only that corpus' vocabulary so every
-    // symbol is in the tokenizer's id map on both paths. Quota does
-    // not bind (≤2 docs/source), where stream and batch admission
-    // provably agree.
-    val dir = java.nio.file.Files.createTempDirectory("graft_tdstream").toString
-    val dropIds = graft.operators.EmbeddingOps
-      .semanticDropIds(spark, sf).collect().map(_.getLong(0))
-    assert(dropIds.nonEmpty, "standing corpus has no semantic drops")
-    // a fixture id that IS semantically dropped, not eval-slot, not
-    // in the delta-free paths' way
-    // fixture ids sit ABOVE the standing corpus' id range so the
-    // standing drop set can never touch the intended survivors
-    val dStar = dropIds.filter(_ % 50 != 0).min
-    val t0 = 1700000000L
-    val textA = "scan column window order sort part agg value line key join"
-    val textB = "merge query group vector hash slow stream filter fast the spark"
-    val textC = "batch table small data big customer row scan column window sort"
-    val textE = "the fast key order sort table scan merge part window small"
-    val rows = Seq(
-      (100001L, "s1", "en", textA, t0),            // survives
-      (100002L, "s2", "en", " " + textA + " ", t0 + 7200), // cross-batch dup
-      (100003L, "s1", "de", textB, t0 + 7200),     // survives
-      (100004L, "s2", "en", "scan column window", t0), // quality gate (< 10 tokens)
-      (dStar, "s3", "en", textC, t0),           // semantic drop via standing state
-      (100050L, "s3", "en", textE, t0))         // eval-slot doc (% 50 == 0)
-    def batchDf = rows.toDF("doc_id", "source", "lang", "text", "es")
-    def write(sel: Seq[Long]): Unit = batchDf
-      .filter(col("doc_id").isin(sel: _*))
-      .select(col("doc_id"), col("source"), col("lang"), col("text"),
-        timestamp_seconds(col("es")).as("ingest_time"))
-      .coalesce(1).write.mode("append").parquet(s"$dir/in")
-    write(Seq(100001L, 100004L, dStar))
-    write(Seq(100002L, 100003L, 100050L))
-    val evalFps = batchDf
-      .filter(size(graft.operators.TextOps.tokens(col("text"))) >=
-        graft.operators.PipelineOps.CorpusMinTokens && col("doc_id") % 50 === 0)
-      .select(md5(lower(trim(col("text")))).as("fp")).distinct()
-    val stream = spark.readStream
-      .schema("doc_id LONG, source STRING, lang STRING, text STRING, ingest_time TIMESTAMP")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$dir/in")
-    val q = DocStream.ingestTrainingData(spark, stream, evalFps, sf)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("tdata_stream").start()
-    q.processAllAvailable()
-    q.stop()
-    def keyed(rows: Array[org.apache.spark.sql.Row]) = rows
-      .map(r => r.getLong(0) -> (r.getString(1), r.getString(2),
-        r.getLong(3), r.getString(4), r.getString(5))).toMap
-    val streamed = keyed(spark.table("tdata_stream").collect())
-    val batch = keyed(graft.operators.PipelineOps.trainingDataOn(
-      spark, sf, batchDf.select("doc_id", "source", "lang", "text")).collect())
-    graft.operators.DedupOps.releaseTransients(spark)
-    assert(streamed === batch, s"stream $streamed != batch $batch")
-    // the cascade actually fired every stage: the dup, the
-    // quality-gated doc, the eval doc, and the semantic member are out
-    assert(streamed.keySet === Set(100001L, 100003L))
-    // and the survivors carry real id sequences
-    streamed.values.foreach { case (_, _, n, ids, split) =>
-      assert(n > 0 && ids.split(",").length.toLong === n)
-      assert(Set("train", "val", "test").contains(split))
-    }
-  }
-
-  test("streaming ftq-GATED composite ≡ the batch twin, and the trained gate binds") {
-    import spark.implicits._
-    // the trained-filter cascade: the standing model (pinned ftq_model
-    // stage, trained on the sf0.001 corpus) gates survivors row-locally
-    // between the semantic anti-join and the tokenizer. Fixture: two
-    // lexicon-heavy docs the model keeps, one corpus-common-words doc
-    // it drops — so the gate must BIND, not just pass everything.
-    val dir = java.nio.file.Files.createTempDirectory("graft_ftdstream").toString
-    val t0 = 1700000000L
-    val textA = "scan column window order sort part agg value line key join"
-    val textB = "merge query group vector hash slow stream filter fast the spark"
-    val textD = "the slow big data row line column value table group order"
-    val rows = Seq(
-      (100001L, "s1", "en", textA, t0),
-      (100003L, "s1", "de", textB, t0 + 7200),
-      (100007L, "s2", "en", textD, t0))
-    def batchDf = rows.toDF("doc_id", "source", "lang", "text", "es")
-    def write(sel: Seq[Long]): Unit = batchDf
-      .filter(col("doc_id").isin(sel: _*))
-      .select(col("doc_id"), col("source"), col("lang"), col("text"),
-        timestamp_seconds(col("es")).as("ingest_time"))
-      .coalesce(1).write.mode("append").parquet(s"$dir/in")
-    write(Seq(100001L, 100007L))
-    write(Seq(100003L))
-    val evalFps = batchDf.filter(col("doc_id") % 50 === 0)
-      .select(md5(lower(trim(col("text")))).as("fp")).distinct()
-    val stream = spark.readStream
-      .schema("doc_id LONG, source STRING, lang STRING, text STRING, ingest_time TIMESTAMP")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$dir/in")
-    val q = DocStream.ingestTrainingDataFtq(spark, stream, evalFps, sf)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("ftd_stream").start()
-    q.processAllAvailable()
-    q.stop()
-    def keyed(rs: Array[org.apache.spark.sql.Row]) = rs
-      .map(r => r.getLong(0) -> (r.getString(1), r.getString(2),
-        r.getLong(3), r.getString(4), r.getString(5))).toMap
-    val streamed = keyed(spark.table("ftd_stream").collect())
-    val batch = keyed(graft.operators.PipelineOps.trainingDataFtqOn(
-      spark, sf, batchDf.select("doc_id", "source", "lang", "text")).collect())
-    val plain = graft.operators.PipelineOps.trainingDataOn(
-      spark, sf, batchDf.select("doc_id", "source", "lang", "text"))
-      .collect().map(_.getLong(0)).toSet
-    val (w, theta) = graft.operators.QualityOps.ftqStandingModelCached(spark, sf)
-    val keepIds = graft.operators.QualityOps.ftqBatchScoresOn(
-      batchDf.select(col("doc_id"), col("text")), w, theta)
-      .filter(col("keep")).collect().map(_.getLong(0)).toSet
-    graft.operators.DedupOps.releaseTransients(spark)
-    // stream ≡ batch twin, doc for doc
-    assert(streamed === batch, s"stream $streamed != batch $batch")
-    // the gate is exactly the trained verdict applied to the plain
-    // composite's survivors — and it BINDS on this fixture
-    assert(streamed.keySet === plain.intersect(keepIds),
-      s"gated ${streamed.keySet} != plain $plain ∩ keep $keepIds")
-    assert(streamed.keySet.nonEmpty && streamed.keySet != plain,
-      s"fixture is vacuous: gate dropped nothing (plain=$plain, keep=$keepIds)")
-  }
-
-  test("streaming ftq scoring ≡ the batch relational feature path, doc for doc") {
-    val docsSchema = spark.read.parquet(s"$sf/documents.parquet").schema
-    val stream = spark.readStream
-      .schema(docsSchema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sf)
-    runToCompletion(DocStream.scoreDocs(spark, stream, sf), "ftq_stream", "append")
-    val streamed = spark.table("ftq_stream").collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
-    val (w, theta) = graft.operators.QualityOps.ftqStandingModel(spark, sf)
-    val batch = graft.operators.QualityOps.ftqBatchScores(spark, sf, w, theta)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
-    graft.operators.DedupOps.releaseTransients(spark)
-    assert(streamed.nonEmpty && streamed === batch,
-      "streamed quality scores diverged from the batch feature path")
-    // the verdict actually splits the corpus (not all-keep/all-drop)
-    assert(streamed.values.exists(_._2) && streamed.values.exists(!_._2))
-  }
-
-  test("streaming dsir scoring ≡ the batch importance weights, doc for doc") {
-    val docsSchema = spark.read.parquet(s"$sf/documents.parquet").schema
-    val stream = spark.readStream
-      .schema(docsSchema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sf)
-    runToCompletion(DocStream.scoreDocsDsir(spark, stream, sf),
-      "dsir_stream", "append")
-    val streamed = spark.table("dsir_stream").collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
-    val (_, theta) = graft.operators.QualityOps.dsirStandingModel(spark, sf)
-    val batch = graft.operators.QualityOps.dsirSelect(spark, sf).collect()
-      .map(r => r.getLong(0) -> (r.getLong(3), r.getLong(3) >= theta)).toMap
-    graft.operators.DedupOps.releaseTransients(spark)
-    // the row-local fold replays the batch relational chain exactly —
-    // same weights, and keep is the frozen-threshold law over them
-    assert(streamed.nonEmpty && streamed === batch,
-      "streamed dsir weights diverged from the batch chain")
-    // the threshold actually splits arrivals (not all-keep/all-drop)
-    assert(streamed.values.exists(_._2) && streamed.values.exists(!_._2))
-    // the frozen-θ verdict agrees with the batch rank selection up to
-    // boundary ties: every batch-selected doc keeps
-    val selected = graft.operators.QualityOps.dsirSelect(spark, sf)
-      .filter(col("selected")).collect().map(_.getLong(0)).toSet
-    graft.operators.DedupOps.releaseTransients(spark)
-    assert(selected.forall(id => streamed(id)._2),
-      "a batch-selected doc failed the frozen-threshold keep")
-  }
-
-  test("streaming winnowing fingerprints ≡ batch wfp, fingerprint for fingerprint") {
-    val docsSchema = spark.read.parquet(s"$sf/documents.parquet").schema
-    val stream = spark.readStream
-      .schema(docsSchema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(sf)
-    runToCompletion(DocStream.fingerprintDocs(stream), "wfp_stream", "append")
-    def keyed(rows: Array[org.apache.spark.sql.Row]) =
-      rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val streamed = keyed(spark.table("wfp_stream").collect())
-    val batch = keyed(graft.operators.TextOps.winnowFingerprints(spark, sf).collect())
-    assert(streamed.nonEmpty && streamed === batch,
-      s"streamed fingerprints (${streamed.size}) diverged from batch (${batch.size})")
-  }
-
-  test("streaming winnowing attribution ≡ batch winnowOverlapDelta, counts included") {
-    // the arriving shard (the delta predicate's slice) streams against
-    // the standing df-capped fingerprint index; pairs AND shared
-    // counts must match the batch probe (same kept selection on both
-    // paths; the arriving side needs no df filter of its own — see
-    // DocStream.attributeDocs)
-    val dir = "/root/testdata/sf0.01"
-    val docsSchema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val stream = spark.readStream
-      .schema(docsSchema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-      .filter(col("doc_id") % 5 === 0)
-    runToCompletion(DocStream.attributeDocs(spark, stream, dir),
-      "winc_stream", "append")
-    val streamed = spark.table("winc_stream").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val batch = graft.operators.TextOps.winnowOverlapDelta(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    graft.operators.DedupOps.releaseTransients(spark)
-    assert(streamed.nonEmpty && streamed === batch,
-      s"stream ${streamed.size} pairs vs batch ${batch.size}")
-  }
-
-  test("streaming PQ encode ≡ batch pqCodesIncremental, code for code") {
-    // the arriving shard (the batch fixture's delta slice) streams in
-    // two micro-batches; row-local encoding against the collected
-    // standing state must reproduce the batch incremental encoder's
-    // codes exactly (identical IEEE op chains, identical tie-breaks)
-    val dir = "/root/testdata/sf0.01"
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val delta = graft.operators.EmbeddingOps.pqDeltaVectors(spark, dir)
-      .select(col("vec_id"), col("v")).as[(Long, Seq[Double])].collect()
-    assert(delta.length >= 2)
-    val src = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Seq[Double])]
-    val vecs = src.toDF().toDF("vec_id", "v")
-    val out = VecStream.encodeArrivals(spark, vecs, dir)
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName("pq_stream").start()
-    delta.grouped(delta.length / 2 + 1).foreach { chunk =>
-      src.addData(chunk.toSeq: _*)
-      q.processAllAvailable()
-    }
-    q.stop()
-    def keyed(rows: Array[org.apache.spark.sql.Row]) = rows
-      .map(r => (r.getLong(0), r.getLong(2)) -> (r.getLong(1), r.getLong(3))).toMap
-    val streamed = keyed(spark.table("pq_stream").collect())
-    val batch = keyed(graft.operators.EmbeddingOps
-      .pqCodesIncremental(spark, dir).collect())
-    graft.operators.DedupOps.releaseTransients(spark)
-    assert(streamed.nonEmpty && streamed === batch,
-      s"streamed codes (${streamed.size}) diverged from batch (${batch.size})")
-  }
-
-  test("streaming refresh ≡ batch dedupKeepIncremental: labels AND verdicts") {
-    // the full linc streaming face: three micro-batches of delta docs
-    // maintain labels + retention verdicts; the final verdict table
-    // must equal the one-shot batch refresh's (modulo its per-run
-    // `reelected` flag — a standing table has no "this refresh" notion)
-    val dir = "/root/testdata/sf0.01"
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val delta = graft.sources.Tables.documents(spark, dir)
-      .filter(col("doc_id") % 5 === 0)
-      .select(col("doc_id"), col("text")).as[(Long, String)].collect()
-    val src = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val state = new DocStream.StandingState(
-      graft.operators.DedupOps.baseLabels(spark, dir),
-      graft.operators.DedupOps.baseKeep(spark, dir))
-    val q = DocStream.maintainRefresh(spark, src.toDF().toDF("doc_id", "text"), dir, state)
-    delta.grouped(delta.length / 3 + 1).foreach { chunk =>
-      src.addData(chunk.toSeq: _*)
-      q.processAllAvailable()
-    }
-    q.stop()
-    def keyed(rows: Array[org.apache.spark.sql.Row]) = rows.map { r =>
-      r.getAs[Long]("doc_id") -> (r.getAs[Long]("cluster"),
-        r.getAs[Boolean]("keep"), r.getAs[Long]("kept_doc"),
-        r.getAs[Long]("n_members"))
-    }.toMap
-    val streamed = keyed(state.keepFrame.collect())
-    val batch = keyed(graft.operators.DedupOps.dedupKeepIncremental(spark, dir).collect())
-    graft.operators.DedupOps.releaseTransients(spark)
-    assert(streamed.size === batch.size)
-    assert(streamed === batch,
-      "streamed standing verdicts diverged from the batch refresh")
-  }
-
   test("stream-stream interval join matches the batch interval join") {
     val joined = EventStream.clickAttribution(
       EventStream.readEvents(spark, sf), EventStream.readEvents(spark, sf))
@@ -1077,123 +687,6 @@ class StreamingSpec extends AnyFunSuite {
       s"value-dependent gap semantics diverged: $got")
   }
 
-  test("streaming corpus ingest: quality gate + fingerprint dedup across micro-batches") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_docstream").toString
-    val t0 = 1700000000L
-    def write(rows: Seq[(Long, String, Long)]): Unit =
-      rows.toDF("doc_id", "text", "es")
-        .select(col("doc_id"), col("text"),
-          timestamp_seconds(col("es")).as("ingest_time"))
-        .coalesce(1).write.mode("append").parquet(s"$dir/in")
-    val longText = "one two three four five six seven eight nine ten"
-    // batch 1: a good doc and a too-short doc (quality gate rejects)
-    write(Seq((1L, longText, t0), (2L, "too short", t0 + 10)))
-    val stream = spark.readStream
-      .schema("doc_id LONG, text STRING, ingest_time TIMESTAMP")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$dir/in")
-    val q = graft.streaming.DocStream.cleanDocs(stream)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("doc_clean").start()
-    q.processAllAvailable()
-    // batch 2: a re-crawl of doc 1's content under a NEW id (case and
-    // padding differ — the normalized fingerprint must still match and
-    // suppress it) plus a genuinely new long doc
-    write(Seq((3L, "  " + longText.toUpperCase + " ", t0 + 60),
-      (4L, "alpha beta gamma delta epsilon zeta eta theta iota kappa", t0 + 70)))
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("doc_clean").collect().map(_.getLong(0)).sorted
-    assert(got.toSeq === Seq(1L, 4L),
-      s"expected the first-crawled and the new doc only, got ${got.toSeq}")
-  }
-
-  test("streaming corpus composite equals the batch composite on the same docs") {
-    import spark.implicits._
-    // the full 4-stage twin: quality gate, dedup, stream-static
-    // decontamination, per-source quota. Fixture sized so the quota
-    // does NOT bind (≤2 docs/source < SourceQuota) — there the
-    // first-arrival streaming quota and the md5-ranked batch quota
-    // provably agree, so streamed survivors must EQUAL the batch
-    // composite (corpusStagesFrom) run over the very same rows.
-    val dir = java.nio.file.Files.createTempDirectory("graft_doccomp").toString
-    val t0 = 1700000000L
-    val textA = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val textB = "one two three four five six seven eight nine ten eleven"
-    val textE = "held out evaluation prompt with exactly ten little tokens"
-    // (doc_id, source, lang, text, arrival)
-    val rows = Seq(
-      (1L, "s1", "en", textA, t0),                        // survives
-      (2L, "s2", "en", "  " + textA.toUpperCase + " ", t0 + 10), // dup of 1
-      (3L, "s1", "en", textE.toUpperCase, t0 + 20),       // contaminated
-      (4L, "s2", "en", "too short", t0 + 30),             // quality gate
-      (7L, "s2", "de", textB, t0 + 40),                   // survives
-      (50L, "s3", "en", textE, t0 + 50))                  // the eval doc itself
-    def batchDf = rows.toDF("doc_id", "source", "lang", "text", "es")
-    def write(sel: Seq[Long]): Unit = batchDf
-      .filter(col("doc_id").isin(sel: _*))
-      .select(col("doc_id"), col("source"), col("lang"), col("text"),
-        timestamp_seconds(col("es")).as("ingest_time"))
-      .coalesce(1).write.mode("append").parquet(s"$dir/in")
-    write(Seq(1L, 2L, 3L, 4L))
-    write(Seq(7L, 50L))
-    // the static benchmark fingerprints — same derivation the batch
-    // composite uses internally (quality-gated, doc_id % 50 == 0)
-    val evalFps = batchDf
-      .filter(size(graft.operators.TextOps.tokens(col("text"))) >=
-        graft.operators.PipelineOps.CorpusMinTokens && col("doc_id") % 50 === 0)
-      .select(md5(lower(trim(col("text")))).as("fp")).distinct()
-    val stream = spark.readStream
-      .schema("doc_id LONG, source STRING, lang STRING, text STRING, ingest_time TIMESTAMP")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$dir/in")
-    val q = DocStream.ingestCorpus(spark, stream, evalFps)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("doc_composite").start()
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("doc_composite").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSet
-    val batch = graft.operators.PipelineOps.corpusStagesFrom(
-        batchDf.select("doc_id", "source", "lang", "text")).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSet
-    assert(streamed === batch, s"stream $streamed != batch $batch")
-    assert(streamed.map(_._1) === Set(1L, 7L))
-  }
-
-  test("streaming per-source quota admits first Q arrivals with one counter per source") {
-    import spark.implicits._
-    // the binding case the equality test can't cover: a hot source
-    // exceeding the quota across MICRO-BATCH boundaries — the state
-    // carried between batches is a single Long per source
-    val dir = java.nio.file.Files.createTempDirectory("graft_docquota").toString
-    val t0 = 1700000000L
-    def write(rows: Seq[(Long, String)]): Unit = rows
-      .toDF("doc_id", "source")
-      .select(col("doc_id"), col("source"), lit("en").as("lang"),
-        concat(lit("u"), col("doc_id"),
-          lit(" alpha beta gamma delta epsilon zeta eta theta iota")).as("text"),
-        timestamp_seconds(lit(t0) + col("doc_id")).as("ingest_time"))
-      .coalesce(1).write.mode("append").parquet(s"$dir/in")
-    write(Seq((10L, "hot"), (11L, "hot"), (12L, "hot")))
-    write(Seq((13L, "hot"), (14L, "hot"), (30L, "cold")))
-    val stream = spark.readStream
-      .schema("doc_id LONG, source STRING, lang STRING, text STRING, ingest_time TIMESTAMP")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$dir/in")
-    val q = DocStream.ingestCorpus(spark, stream,
-        spark.emptyDataFrame.select(lit("").as("fp")).limit(0), quota = 2)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("doc_quota").start()
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("doc_quota").collect().map(_.getLong(0)).sorted.toSeq
-    // batch 1 fills hot's quota with its two lowest ids; batch 2's hot
-    // docs find the counter full; cold is untouched by hot's counter
-    assert(got === Seq(10L, 11L, 30L), s"quota mis-admitted: $got")
-  }
-
   test("three sessionizers agree: fMGWS = transformWithState = session_window") {
     import spark.implicits._
     // the sess_flush fixture on ALL THREE backends: gap-close emission
@@ -1251,257 +744,5 @@ class StreamingSpec extends AnyFunSuite {
     assert(tws === fmgws, s"backends diverged: tws=$tws fmgws=$fmgws")
     assert(swin === fmgws,
       s"session_window diverged from the custom sessionizers: swin=$swin fmgws=$fmgws")
-  }
-
-  test("transformWithState quota backend admits the same rows as flatMapGroupsWithState") {
-    import spark.implicits._
-    // same fixture as the quota test above, run through the Spark 4
-    // StatefulProcessor backend (RocksDB state store, required by the
-    // API): backend equivalence means the quota semantics live in the
-    // shared admitSmallest, not in either engine's state plumbing
-    val dir = java.nio.file.Files.createTempDirectory("graft_doctws").toString
-    val t0 = 1700000000L
-    def write(rows: Seq[(Long, String)]): Unit = rows
-      .toDF("doc_id", "source")
-      .select(col("doc_id"), col("source"), lit("en").as("lang"),
-        concat(lit("u"), col("doc_id"),
-          lit(" alpha beta gamma delta epsilon zeta eta theta iota")).as("text"),
-        timestamp_seconds(lit(t0) + col("doc_id")).as("ingest_time"))
-      .coalesce(1).write.mode("append").parquet(s"$dir/in")
-    write(Seq((10L, "hot"), (11L, "hot"), (12L, "hot")))
-    write(Seq((13L, "hot"), (14L, "hot"), (30L, "cold")))
-    val keepConf = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val stream = spark.readStream
-        .schema("doc_id LONG, source STRING, lang STRING, text STRING, ingest_time TIMESTAMP")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$dir/in")
-      val q = DocStream.ingestCorpusTws(spark, stream,
-          spark.emptyDataFrame.select(lit("").as("fp")).limit(0), quota = 2)
-        .writeStream.outputMode("append").format("memory")
-        .queryName("doc_tws").start()
-      q.processAllAvailable()
-      q.stop()
-      val got = spark.table("doc_tws").collect().map(_.getLong(0)).sorted.toSeq
-      // identical to the flatMapGroupsWithState backend's admission
-      assert(got === Seq(10L, 11L, 30L), s"tws backend diverged: $got")
-    } finally keepConf match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None    => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
-  test("streaming quota: state survives a checkpoint restart and replay is deterministic") {
-    import spark.implicits._
-    // turns the in-code determinism claim (doc_id sort within a
-    // micro-batch ⇒ a replay of the same batch sequence emits
-    // identical rows) into a pinned contract, and proves the
-    // one-Long-per-source counter is RECOVERED from the checkpoint on
-    // restart rather than reset
-    val root = java.nio.file.Files.createTempDirectory("graft_docreplay").toString
-    val t0 = 1700000000L
-    def write(rows: Seq[(Long, String)]): Unit = rows
-      .toDF("doc_id", "source")
-      .select(col("doc_id"), col("source"), lit("en").as("lang"),
-        concat(lit("u"), col("doc_id"),
-          lit(" alpha beta gamma delta epsilon zeta eta theta iota")).as("text"),
-        timestamp_seconds(lit(t0) + col("doc_id")).as("ingest_time"))
-      .coalesce(1).write.mode("append").parquet(s"$root/in")
-    def run(ck: String, out: String): Unit = {
-      val stream = spark.readStream
-        .schema("doc_id LONG, source STRING, lang STRING, text STRING, ingest_time TIMESTAMP")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$root/in")
-      val q = DocStream.ingestCorpus(spark, stream,
-          spark.emptyDataFrame.select(lit("").as("fp")).limit(0), quota = 2)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ck)
-        .format("parquet").option("path", out).start()
-      q.processAllAvailable(); q.stop()
-    }
-    write(Seq((10L, "hot"), (11L, "hot"))) // fills hot's quota exactly
-    run(s"$root/ck", s"$root/out")
-    // stop, new arrivals, restart from the SAME checkpoint: hot's
-    // counter must come back as 2 (full), so doc 12 is rejected while
-    // cold's fresh counter admits doc 30
-    write(Seq((12L, "hot"), (30L, "cold")))
-    run(s"$root/ck", s"$root/out")
-    val got = spark.read.parquet(s"$root/out")
-      .collect().map(_.getLong(0)).sorted.toSeq
-    assert(got === Seq(10L, 11L, 30L), s"counter lost across restart: $got")
-    // replay determinism: a FRESH run over the same input files (same
-    // per-file micro-batch sequence) emits the identical admitted set
-    run(s"$root/ck2", s"$root/out2")
-    val replay = spark.read.parquet(s"$root/out2")
-      .collect().map(_.getLong(0)).sorted.toSeq
-    assert(replay === got, s"replay diverged: $replay vs $got")
-  }
-
-  test("tws quota on RocksDB with changelog checkpointing recovers across restart") {
-    import spark.implicits._
-    // the state-store recovery-latency story at 100 TB state:
-    // changelog checkpointing uploads per-batch DELTAS instead of
-    // RocksDB snapshot files, so restart recovery replays a changelog
-    // rather than re-downloading full snapshots. The semantics
-    // contract is that recovery is indistinguishable from the
-    // snapshot path — pinned here by re-running the quota
-    // checkpoint-restart fixture on the transformWithState backend
-    // with changelog checkpointing ON (confs live on a private child
-    // session; nothing shared is mutated)
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s2.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      "true")
-    val root = java.nio.file.Files.createTempDirectory("graft_docchlog").toString
-    val t0 = 1700000000L
-    def write(rows: Seq[(Long, String)]): Unit = rows
-      .toDF("doc_id", "source")
-      .select(col("doc_id"), col("source"), lit("en").as("lang"),
-        concat(lit("u"), col("doc_id"),
-          lit(" alpha beta gamma delta epsilon zeta eta theta iota")).as("text"),
-        timestamp_seconds(lit(t0) + col("doc_id")).as("ingest_time"))
-      .coalesce(1).write.mode("append").parquet(s"$root/in")
-    def run(): Unit = {
-      val stream = s2.readStream
-        .schema("doc_id LONG, source STRING, lang STRING, text STRING, ingest_time TIMESTAMP")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$root/in")
-      val q = DocStream.ingestCorpusTws(s2, stream,
-          s2.emptyDataFrame.select(lit("").as("fp")).limit(0), quota = 2)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", s"$root/ck")
-        .format("parquet").option("path", s"$root/out").start()
-      q.processAllAvailable(); q.stop()
-    }
-    write(Seq((10L, "hot"), (11L, "hot"))) // fills hot's quota exactly
-    run()
-    // restart from the changelog-checkpointed state: hot's counter
-    // must replay back to 2 (full) so doc 12 is rejected, while
-    // cold's fresh counter admits doc 30
-    write(Seq((12L, "hot"), (30L, "cold")))
-    run()
-    val got = spark.read.parquet(s"$root/out")
-      .collect().map(_.getLong(0)).sorted.toSeq
-    assert(got === Seq(10L, 11L, 30L),
-      s"changelog-checkpointed state lost across restart: $got")
-    // prove the changelog path actually engaged (a mistyped conf key
-    // would silently fall back to snapshot checkpointing and this test
-    // would assert nothing new): delta uploads appear as .changelog
-    // files under the state directory
-    val changelogs = java.nio.file.Files
-      .walk(java.nio.file.Paths.get(s"$root/ck/state"))
-      .filter(_.toString.endsWith(".changelog")).count()
-    assert(changelogs > 0, "no .changelog files — changelog checkpointing never engaged")
-  }
-
-  test("streaming corpus ingest: dedup state expires behind the watermark") {
-    import spark.implicits._
-    // the bounded-state side of the contract: a re-crawl of content
-    // whose fingerprint state has EXPIRED (arrival far beyond the
-    // 30-minute horizon) is admitted again — exactly the trade that
-    // lets an unbounded crawl run with finite state. Batch dedup over
-    // the full corpus remains the global guarantee; the stream only
-    // promises in-horizon suppression.
-    val dir = java.nio.file.Files.createTempDirectory("graft_docexp").toString
-    val t0 = 1700000000L
-    def write(rows: Seq[(Long, String, Long)]): Unit =
-      rows.toDF("doc_id", "text", "es")
-        .select(col("doc_id"), col("text"),
-          timestamp_seconds(col("es")).as("ingest_time"))
-        .coalesce(1).write.mode("append").parquet(s"$dir/in")
-    val text = "one two three four five six seven eight nine ten"
-    write(Seq((1L, text, t0)))
-    val stream = spark.readStream
-      .schema("doc_id LONG, text STRING, ingest_time TIMESTAMP")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$dir/in")
-    val q = graft.streaming.DocStream.cleanDocs(stream)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("doc_expire").start()
-    q.processAllAvailable()
-    // advance the watermark far past t0 + 30 min with unrelated docs
-    write(Seq((2L, "alpha beta gamma delta epsilon zeta eta theta iota kappa", t0 + 7200)))
-    q.processAllAvailable()
-    // the same content re-crawled 2h later: its state is gone
-    write(Seq((3L, text, t0 + 7300)))
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("doc_expire").collect().map(_.getLong(0)).sorted
-    assert(got.toSeq === Seq(1L, 2L, 3L),
-      s"expired fingerprint not re-admitted (state unbounded?): ${got.toSeq}")
-  }
-
-  test("streaming semantic probe ≡ batch sinc restricted to arrival × standing") {
-    // the sinc streaming face: delta vectors arrive over three
-    // micro-batches, assign to their trained cell row-locally, and
-    // probe the standing membership; the union of all batches' pairs
-    // must equal the batch probe minus its delta-delta pairs (which
-    // need the maintained-state face — documented on semanticArrivals),
-    // cos values bit-for-bit
-    val dir = "/root/testdata/sf0.01"
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val delta = graft.operators.EmbeddingOps.pqDeltaVectors(spark, dir)
-      .select(col("vec_id"), col("v")).as[(Long, Seq[Double])].collect()
-    assert(delta.length >= 3)
-    val src = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Seq[Double])]
-    val vecs = src.toDF().toDF("vec_id", "v")
-    val out = VecStream.semanticArrivals(spark, vecs, dir)
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName("sem_stream").start()
-    delta.grouped(delta.length / 3 + 1).foreach { chunk =>
-      src.addData(chunk.toSeq: _*)
-      q.processAllAvailable()
-    }
-    q.stop()
-    def keyed(rows: Array[org.apache.spark.sql.Row]) = rows
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val streamed = keyed(spark.table("sem_stream").collect())
-    val batch = keyed(graft.operators.EmbeddingOps.semanticDedupDelta(spark, dir)
-      .filter(!(col("vec_a") % 5 === 0 && col("vec_b") % 5 === 0)).collect())
-    graft.operators.DedupOps.releaseTransients(spark)
-    assert(streamed.nonEmpty && streamed === batch,
-      s"streamed pairs (${streamed.size}) diverged from batch (${batch.size})")
-  }
-
-  test("streaming semantic refresh ≡ batch sref after 3 micro-batches") {
-    // the maintained-state face: arriving vectors admit, probe the
-    // vectors the state already knows (order-robust deferred pairing),
-    // and re-elect touched clusters per batch; the final verdict table
-    // must equal the one-shot batch refresh's, modulo its per-run
-    // `reelected` flag
-    val dir = "/root/testdata/sf0.01"
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ops = graft.operators.EmbeddingOps
-    val delta = ops.pqDeltaVectors(spark, dir)
-      .select(col("vec_id"), col("v")).as[(Long, Seq[Double])].collect()
-    assert(delta.length >= 3)
-    val state = new VecStream.SemStandingState(
-      ops.semBaseLabels(spark, dir), ops.semBaseKeep(spark, dir))
-    val src = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Seq[Double])]
-    val q = VecStream.maintainSemantic(spark,
-      src.toDF().toDF("vec_id", "v"), dir, state)
-    delta.grouped(delta.length / 3 + 1).foreach { chunk =>
-      src.addData(chunk.toSeq: _*)
-      q.processAllAvailable()
-    }
-    q.stop()
-    def keyed(rows: Array[org.apache.spark.sql.Row]) = rows.map(r =>
-      r.getAs[Long]("vec_id") -> ((r.getAs[Long]("cell"), r.getAs[Double]("ccos"),
-        r.getAs[Long]("cluster"), r.getAs[Boolean]("keep"),
-        r.getAs[Long]("kept_vec"), r.getAs[Long]("n_members")))).toMap
-    val streamed = keyed(state.keepFrame.collect())
-    val batch = keyed(ops.semanticRefresh(spark, dir).collect())
-    graft.operators.DedupOps.releaseTransients(spark)
-    assert(streamed.nonEmpty && streamed === batch,
-      s"maintained verdicts (${streamed.size}) diverged from batch sref " +
-        s"(${batch.size}) on ${
-          (streamed.keySet ++ batch.keySet)
-            .count(k => streamed.get(k) != batch.get(k))} vec_ids")
   }
 }
