@@ -31,6 +31,9 @@ object Cleaning {
     * D1; reference: extract-transform-data/et_produtos.py:66-85).
     * NULL keys group together, matching pandas `duplicated` NaN
     * semantics. One shuffle on the key; no driver-side state.
+    * Materialized once (eager local checkpoint): every staged median
+    * downstream re-reads it instead of re-scanning the source. A lost
+    * block fails the job; it is never silently recomputed.
     */
   def dedupKeepFirst(df: DataFrame, keys: Seq[String],
                      keepIdx: Boolean = false): DataFrame = {
@@ -39,7 +42,7 @@ object Cleaning {
       .withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
       .drop("_rn")
-    if (keepIdx) deduped else deduped.drop("_row_idx")
+    (if (keepIdx) deduped else deduped.drop("_row_idx")).localCheckpoint()
   }
 
   /** Exact interpolated per-group median of `value` over its non-null

@@ -44,9 +44,10 @@ object ReportModel {
   private[graft] val ReportMaxRows = 1000
 
   /** Collect at most ReportMaxRows (+1 row to detect truncation).
-    * The frames arrive ordered, so limit-after-orderBy plans a
-    * TakeOrderedAndProject — the cluster-side work is bounded too,
-    * not just the driver heap.
+    * The frames arrive ordered: over a plain query the limit plans a
+    * TakeOrderedAndProject, over a computed (cached) one it reads the
+    * first rows in partition order — either way the cluster-side work
+    * is bounded too, not just the driver heap.
     */
   private def collectCapped(df: org.apache.spark.sql.DataFrame)
       : (Array[org.apache.spark.sql.Row], Boolean) = {
@@ -71,15 +72,20 @@ object ReportModel {
       (Option(r.get(labelIdx)).fold("")(_.toString), v)
     }
 
+  /** Builds the full report model over the load-boundary tables `c`. */
+  def build(c: SalesPipeline.Cleaned): Report =
+    build(SalesPipeline.reportTables.map { case (name, q) => name -> q(c) })
+
   /** Builds the full report model (the reference's section/chart
-    * inventory, same order).
+    * inventory, same order) from `SalesPipeline.reportTables`' frames.
     */
-  def build(c: SalesPipeline.Cleaned): Report = {
-    val (q1, t1) = collectCapped(SalesPipeline.q1SalesByEmployee(c).select("nome", "valor_total"))
-    val (q2, t2) = collectCapped(SalesPipeline.q2AvgTicketByProduct(c).select("nome", "ticket_medio"))
-    val (q3, t3) = collectCapped(SalesPipeline.q3SalesByCategory(c))
-    val q4 = SalesPipeline.q4Top5Employees(c).select("nome", "valor_total").collect()
-    val (q5, t5) = collectCapped(SalesPipeline.q5SalesByPeriod(c))
+  def build(tables: Seq[(String, org.apache.spark.sql.DataFrame)]): Report = {
+    val Seq(byEmployee, byProduct, byCategory, top5, byPeriod) = tables.map(_._2)
+    val (q1, t1) = collectCapped(byEmployee.select("nome", "valor_total"))
+    val (q2, t2) = collectCapped(byProduct.select("nome", "ticket_medio"))
+    val (q3, t3) = collectCapped(byCategory)
+    val q4 = top5.select("nome", "valor_total").collect()
+    val (q5, t5) = collectCapped(byPeriod)
     val nEmp = total(q1, t1); val nProd = total(q2, t2)
     val nCat = total(q3, t3); val nPer = total(q5, t5)
     Report("Relatório de Vendas", Seq(

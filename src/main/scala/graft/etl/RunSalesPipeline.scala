@@ -20,17 +20,17 @@ object RunSalesPipeline {
 
     val t0 = System.nanoTime()
     val cleanedRaw = SalesPipeline.run(spark, csvDir, refDate)
-    // ~20 actions follow (writes, collects, counts, audits) — cache both
-    // forms once so the ETL DAG doesn't re-execute per action
+    // the one cache set: every sink, the report and the audits read it,
+    // the load boundary through a projection
     val cleaned = SalesPipeline.Cleaned(
       cleanedRaw.produtos.cache(), cleanedRaw.vendas.cache(), cleanedRaw.empregados.cache())
-    val b = SalesPipeline.loadBoundary(cleaned)
-    val bc = SalesPipeline.Cleaned(b.produtos.cache(), b.vendas.cache(), b.empregados.cache())
+    val bc = SalesPipeline.loadBoundary(cleaned)
     SalesPipeline.writeParquet(bc, outDir)
-    SalesPipeline.writeReportTables(bc, outDir)
-    // The HTML report, the PDF and the console all render the one
-    // ReportModel (built once).
-    val model = ReportModel.build(bc)
+    // each report table computed once, for both copies and the ReportModel
+    val model = SalesPipeline.withReportTables(bc) { tables =>
+      SalesPipeline.writeReportTables(tables, outDir)
+      ReportModel.build(tables)
+    }
     SalesReportHtml.write(model, s"$outDir/report")
     SalesReportPdf.write(model, s"$outDir/report")
     println(s"[pipeline] produtos=${bc.produtos.count()} vendas=${bc.vendas.count()} " +

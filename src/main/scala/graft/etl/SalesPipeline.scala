@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.SalesIo
+import graft.util.Num.moneySum
 
 /** End-to-end hermetic pipeline mirroring the reference's 9 sequential
   * steps (reference: pipeline.py:71-96) minus environment provisioning:
@@ -76,36 +77,54 @@ object SalesPipeline {
     SalesIo.write(b.vendas, "parquet", s"$outDir/resumo-vendas.parquet")
   }
 
-  /** S9 made tabular: the five report tables as machine-checkable
-    * parquet + csv artifacts (reference: save_data_pdf_report.py
-    * renders these into a PDF — chart/PDF rendering is presentation,
-    * not a query capability; SURVEY.md §2.1 S9).
+  /** The five report tables, in report order: each name with its query
+    * over the load-boundary tables. The report sink and ReportModel
+    * both read this one declaration.
     */
-  def writeReportTables(raw: Cleaned, outDir: String): Unit = {
+  val reportTables: Seq[(String, Cleaned => DataFrame)] = Seq(
+    "vendas_por_funcionario" -> q1SalesByEmployee,
+    "ticket_medio_por_produto" -> q2AvgTicketByProduct,
+    "vendas_por_categoria" -> q3SalesByCategory,
+    "top5_funcionarios" -> q4Top5Employees,
+    "vendas_por_periodo" -> q5SalesByPeriod)
+
+  /** Runs `f` over `reportTables` on `raw`'s load boundary, each frame
+    * cached (order kept) for the duration of `f`, so every consumer
+    * reads one computed result. A lost block is recomputed from `raw`.
+    */
+  def withReportTables[T](raw: Cleaned)(f: Seq[(String, DataFrame)] => T): T = {
     val c = loadBoundary(raw) // safe either way — loadBoundary is idempotent
-    val tables = Seq(
-      "vendas_por_funcionario" -> q1SalesByEmployee(c),
-      "ticket_medio_por_produto" -> q2AvgTicketByProduct(c),
-      "vendas_por_categoria" -> q3SalesByCategory(c),
-      "top5_funcionarios" -> q4Top5Employees(c),
-      "vendas_por_periodo" -> q5SalesByPeriod(c))
+    val tables = reportTables.map { case (name, q) => name -> q(c).cache() }
+    try f(tables) finally tables.foreach(_._2.unpersist(blocking = true))
+  }
+
+  /** S9 made tabular: the report tables as machine-checkable parquet +
+    * csv artifacts (reference: save_data_pdf_report.py renders these
+    * into a PDF — chart/PDF rendering is presentation, not a query
+    * capability; SURVEY.md §2.1 S9).
+    */
+  def writeReportTables(tables: Seq[(String, DataFrame)], outDir: String): Unit =
     tables.foreach { case (name, df) =>
       SalesIo.write(df, "parquet", s"$outDir/report/$name.parquet")
       // one part file keeps the csv copy in query order
       SalesIo.write(df.coalesce(1), "csv", s"$outDir/report/$name.csv")
     }
-  }
+
+  def writeReportTables(raw: Cleaned, outDir: String): Unit =
+    withReportTables(raw)(writeReportTables(_, outDir))
 
   // ---- The five analytic queries over the cleaned tables -------------
   // (reference: save-data/save_data_pdf_report.py:64-222; SURVEY.md
   // §2.3-2.5.) Dimensions are broadcast: the fact table never shuffles
-  // for the join, and each query is a single hash-aggregation.
+  // for the join, and each query is a single hash-aggregation. Money
+  // sums are exact (Num.moneySum, the reference's Postgres NUMERIC
+  // sum), so a report does not depend on the plan's summation order.
 
   /** Q1: total sales per employee (reference: :75-85). */
   def q1SalesByEmployee(c: Cleaned): DataFrame =
     c.vendas.join(broadcast(c.empregados), Seq("id_empregado"))
       .groupBy(col("id_empregado"), col("nome"))
-      .agg(coalesce(sum("valor_total"), lit(0)).as("valor_total"))
+      .agg(coalesce(moneySum(col("valor_total")), lit(0)).as("valor_total"))
       .orderBy(desc("valor_total"), col("id_empregado")) // id tie-break: deterministic top-5 cut
 
   /** Q2: average ticket per product, result sorted by the number
@@ -115,7 +134,7 @@ object SalesPipeline {
   def q2AvgTicketByProduct(c: Cleaned): DataFrame =
     c.vendas.join(broadcast(c.produtos), Seq("id_produto"))
       .groupBy(col("id_produto"), col("nome"))
-      .agg(coalesce(sum("valor_total") / count("id_venda"), lit(0)).as("ticket_medio"))
+      .agg(coalesce(moneySum(col("valor_total")) / count("id_venda"), lit(0)).as("ticket_medio"))
       .withColumn("_n", regexp_extract(col("nome"), "(\\d+)", 1).cast("int"))
       .orderBy(asc_nulls_last("_n"), col("id_produto"))
       .drop("_n")
@@ -144,7 +163,7 @@ object SalesPipeline {
       .groupBy(date_format(col("data"), "yyyy-MM").as("periodo"))
       .agg(
         count("id_venda").as("quantidade_vendas"),
-        sum("valor_total").as("valor_total"))
+        moneySum(col("valor_total")).as("valor_total"))
       .orderBy("periodo")
   }
 }

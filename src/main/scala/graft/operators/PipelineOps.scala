@@ -732,7 +732,8 @@ object PipelineOps {
     * (survivors whose embedding lost its SemDeDup election drop — one
     * anti-join against the delta-sized drop set; ids are shared
     * between the documents and embeddings tables, and docs without an
-    * embedding have no verdict and pass through).
+    * embedding have no verdict and pass through). Also the packer's
+    * survivor set ([[packedOffsets]]).
     */
   private def trainedSurvivors(spark: SparkSession, dir: String): DataFrame =
     corpusSurvivorsFrom(Tables.documents(spark, dir))
@@ -881,13 +882,9 @@ object PipelineOps {
     */
   private def packedOffsets(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val docs = Tables.documents(spark, dir)
     // single consumer (the join into f below) now that the encode is
     // the pinned tok_ids stage — no persist needed
-    val surv = corpusSurvivorsFrom(docs)
-      .join(graft.operators.EmbeddingOps.semanticDropIds(spark, dir)
-        .select(col("vec_id").as("doc_id")), Seq("doc_id"), "left_anti")
-      .select("doc_id", "lang")
+    val surv = trainedSurvivors(spark, dir).select("doc_id", "lang")
     // pinned encoded corpus, restricted to survivors by the join below
     val toks = TextOps.bpeTokenIdsStage(spark, dir)
     val wPack = Window.partitionBy("lang", "bucket").orderBy("doc_id")

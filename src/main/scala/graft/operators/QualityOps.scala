@@ -249,10 +249,9 @@ object QualityOps {
     * arithmetic, so the features (and every gradient sum over them)
     * are bitwise engine-exact. Built relationally (explode ->
     * two aggregations -> dense array via a per-doc map lookup), the
-    * codegen'd shape; eagerly checkpointed because training reads it
-    * FtqRounds + 2 times.
-    */
-  /** The corpus feature frame as a pinned MEMO STAGE (`ftq_fv`) — the
+    * codegen'd shape.
+    *
+    * The frame is a pinned MEMO STAGE (`ftq_fv`) — the
     * deployment's standing feature table: built once per (session,
     * dir) and read by the model trainer (the `ftq_model` stage
     * build), the end-to-end classifier gate (`ftq`) and the gated
